@@ -62,8 +62,8 @@ object Coverage {
   }
 
   /** query key -> (module file, Object.function entry point), via the
-    * registry map entry `"key" -> valName` and the first project-object
-    * call inside that val's body.
+    * registry entry `QueryDef("key", valName, ...)` and the first
+    * project-object call inside that val's body.
     */
   private def entryOf(
       key: String,
@@ -81,10 +81,9 @@ object Coverage {
     }
 
   private def keyToValMap(src: String): Map[String, String] =
-    """"([a-z0-9_]+)"\s*->\s*([A-Za-z0-9_]+)""".r
+    """QueryDef\("([a-z0-9_]+)",\s*([A-Za-z0-9_]+)""".r
       .findAllMatchIn(src)
       .map(m => (m.group(1), m.group(2)))
-      .filterNot(_._2.endsWith("Sql"))
       .toMap
 
   /** All test sources, read once. */
@@ -108,15 +107,9 @@ object Coverage {
       entry: Option[(String, String, String)]
   ): Seq[String] = {
     val nameNeedle = "\"" + name + "\""
-    // the ...FromState variants delegate to the docs-based entry points
-    // specs drive, so both spellings count as coverage
-    val fnNeedles = entry.toSeq.flatMap { case (_, o, f) =>
-      Seq(s"$o.$f", s"$o.${f.stripSuffix("FromState")}").distinct
-    }
+    val fnNeedle = entry.map { case (_, o, f) => s"$o.$f" }
     tests.collect {
-      case (spec, src)
-          if src.contains(nameNeedle) || fnNeedles.exists(src.contains) =>
-        spec
+      case (spec, src) if src.contains(nameNeedle) || fnNeedle.exists(src.contains) => spec
     }
   }
 

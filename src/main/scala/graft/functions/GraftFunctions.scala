@@ -94,7 +94,7 @@ object GraftFunctions {
   /** Idempotently install the optimizer rewrites
     * ([[graft.plans.TopKRewrite]]) on an existing session via
     * `experimental.extraOptimizations` — the runtime path the engine's
-    * own mains (Verify / Bench / Profile) and test harness use; the
+    * own mains (Verify / Bench) and test harness use; the
     * `spark.sql.extensions` route injects the same rule at build time.
     */
   def installOptimizations(spark: SparkSession): Unit = {

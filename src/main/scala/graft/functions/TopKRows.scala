@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
 /** Bounded per-key top-k as a real aggregate function, replacing
@@ -89,9 +89,13 @@ case class TopKRows(
           else if (an) { if (desc(i)) 1 else -1 }
           else if (bn) { if (desc(i)) -1 else 1 }
           else {
-            val av = a.get(i, dt).asInstanceOf[Comparable[Any]]
-            val bv = b.get(i, dt)
-            val c = av.compareTo(bv)
+            // floating fields compare as SQL orders them (-0.0 = 0.0,
+            // NaN = NaN above every number), matching the window sort
+            val c = dt match {
+              case DoubleType => SQLOrderingUtil.compareDoubles(a.getDouble(i), b.getDouble(i))
+              case FloatType  => SQLOrderingUtil.compareFloats(a.getFloat(i), b.getFloat(i))
+              case _          => a.get(i, dt).asInstanceOf[Comparable[Any]].compareTo(b.get(i, dt))
+            }
             if (desc(i)) -c else c
           }
         i += 1

@@ -278,24 +278,21 @@ object Dedup {
     * banding miss directly. Output one row:
     * (n_exact, n_lsh, n_both, recall_permille).
     *
+    * The LSH side reads the dedup state `st`; the exact (PPJoin)
+    * denominator still needs token SEQUENCES for its grams, so `docs`
+    * is scanned once for that side.
+    *
     * Shape at scale: both pair generators keep their bucketed/banded
     * shapes; the comparison adds two joins of slim pair-keyed tables
     * and three 1-row aggregates crossJoined (the established 1-row
     * pattern). Both pair sets are staged — each is read twice.
     */
-  def lshRecall(docs: DataFrame, thetaPct: Int = 90): DataFrame =
-    lshRecallFromState(state(docs), docs, thetaPct)
-
-  /** [[lshRecall]] with the LSH side read from committed dedup state;
-    * the exact (PPJoin) denominator still needs token SEQUENCES for its
-    * grams, so `docs` is scanned once for that side.
-    */
-  def lshRecallFromState(st: DedupState, docs: DataFrame, thetaPct: Int = 90): DataFrame = {
+  def lshRecall(st: DedupState, docs: DataFrame, thetaPct: Int = 90): DataFrame = {
     val exact =
       graft.util.Materialize.stage(ngramJaccardPairs(docs, thetaPct).select("a", "b"))
     val src = docs.select(col("doc_id"), col("source"))
     val lsh = graft.util.Materialize.stage(
-      minhashLshPairsFromState(st, thetaPct)
+      minhashLshPairs(st, thetaPct)
         .select("a", "b")
         .join(src.select(col("doc_id").as("a"), col("source").as("sa")), "a")
         .join(src.select(col("doc_id").as("b"), col("source").as("sb")), "b")
@@ -317,20 +314,27 @@ object Dedup {
       )
   }
 
+  /** MinHash signature length and LSH band count of every dedup-state
+    * artifact — fixed, as in the oracles' band rule (`mhBandCtes`), so
+    * a committed band index and a fresh delta always band alike.
+    */
+  private val Seeds = 16
+  private val Bands = 8
+
   /** md5-order MinHash signature column: per seed i, the minimum of
     * md5("i:" + token) over the document's distinct tokens. Shared rule
     * with the oracle: list_min(list_transform(...)) there.
     */
-  private def minhashSig(toksCol: String, seeds: Int): Seq[org.apache.spark.sql.Column] = {
+  private def minhashSig(toksCol: String): Seq[org.apache.spark.sql.Column] = {
     // one native single-pass signature (graft.functions.MinhashSig) in
-    // place of `seeds` interpreted transform/array_min folds; each mh_i
+    // place of `Seeds` interpreted transform/array_min folds; each mh_i
     // is byte-identical to array_min(transform(toks, t -> md5('i:'||t)))
-    val sig = GraftFunctions.minhashSig(col(toksCol), seeds)
-    (0 until seeds).map(i => sig.getItem(i).as(s"mh$i"))
+    val sig = GraftFunctions.minhashSig(col(toksCol), Seeds)
+    (0 until Seeds).map(i => sig.getItem(i).as(s"mh$i"))
   }
 
   /** Distinct sorted token set per document, (doc_id, toks) — the
-    * second committable dedup-state artifact next to [[bandIndex]]
+    * second committable dedup-state artifact next to the band index
     * (corpus-global: no `source` block column).
     */
   def tokenSetTable(docs: DataFrame): DataFrame =
@@ -339,62 +343,54 @@ object Dedup {
       array_sort(array_distinct(TokenRules.tokens(col("text")))).as("toks")
     )
 
+  /** The `Bands` band-key columns (all aliased `bandKey`) over the mh_i
+    * signature columns of [[minhashSig]].
+    */
+  private def bandKeyCols: Seq[org.apache.spark.sql.Column] = {
+    val rows = Seeds / Bands
+    (0 until Bands).map { bIdx =>
+      md5(concat_ws("|", (0 until rows).map(r => col(s"mh${bIdx * rows + r}")): _*)).as("bandKey")
+    }
+  }
+
   /** (doc_id, bandKey) LSH band index of a tokenSets frame — one scan,
     * all band keys exploded, distinct. Shared by the batch pair
     * generator and the incremental (delta-vs-committed-base) path.
     */
-  private def bandedKeys(t: DataFrame, seeds: Int, bands: Int): DataFrame = {
-    val rows = seeds / bands
-    val sig = t.select(col("doc_id") +: col("toks") +: minhashSig("toks", seeds): _*)
-    val bandKeyCols = (0 until bands).map { bIdx =>
-      md5(concat_ws("|", (0 until rows).map(r => col(s"mh${bIdx * rows + r}")): _*)).as("bandKey")
-    }
-    sig
+  private def bandedKeys(t: DataFrame): DataFrame =
+    t.select(col("doc_id") +: col("toks") +: minhashSig("toks"): _*)
       .select(col("doc_id"), explode(array(bandKeyCols: _*)).as("bandKey"))
       .distinct()
-  }
-
-  /** The committable MinHash-LSH band index of a corpus: (doc_id,
-    * bandKey), one row per document per band. At 100 TB this table (and
-    * the token-set table next to it) IS the dedup state a pipeline
-    * checkpoints — a new crawl deduplicates against it without touching
-    * a byte of the already-ingested corpus (see [[incrementalKeep]]).
-    */
-  def bandIndex(docs: DataFrame, seeds: Int = 16, bands: Int = 8): DataFrame =
-    bandedKeys(tokenSetTable(docs), seeds, bands)
 
   /** (doc_id, bandKey, toks) — the banded projection with the token set
     * retained: the row-local input of the STREAMING near-dup path
     * ([[graft.streaming.DedupStream]]), whose per-band state verifies
     * with the tokens directly instead of joining the committed token
-    * table. Same signature/band-key bytes as [[bandIndex]]; duplicate
-    * (doc, bandKey) rows from band collisions are left in (the stream
-    * stage dedups per group — a stateless `distinct` is not available
-    * pre-state on a stream).
+    * table. Same signature/band-key bytes as `state(docs).banded`;
+    * duplicate (doc, bandKey) rows from band collisions are left in (the
+    * stream stage dedups per group — a stateless `distinct` is not
+    * available pre-state on a stream).
     */
-  private[graft] def bandedWithToks(docs: DataFrame, seeds: Int, bands: Int): DataFrame = {
-    val rows = seeds / bands
-    val t = tokenSetTable(docs)
-    val sig = t.select(col("doc_id") +: col("toks") +: minhashSig("toks", seeds): _*)
-    val bandKeyCols = (0 until bands).map { bIdx =>
-      md5(concat_ws("|", (0 until rows).map(r => col(s"mh${bIdx * rows + r}")): _*)).as("bandKey")
-    }
-    sig.select(col("doc_id"), explode(array(bandKeyCols: _*)).as("bandKey"), col("toks"))
-  }
+  private[graft] def bandedWithToks(docs: DataFrame): DataFrame =
+    tokenSetTable(docs)
+      .select(col("doc_id") +: col("toks") +: minhashSig("toks"): _*)
+      .select(col("doc_id"), explode(array(bandKeyCols: _*)).as("bandKey"), col("toks"))
 
-  /** [[bandIndex]] from an already-materialized token-set frame —
-    * used when `derived_token_sets` is committed first and the band
-    * index is derived from the committed table instead of re-tokenizing
-    * the corpus.
+  /** The band index `state(docs).banded` from an already-materialized
+    * token-set frame — used when `derived_token_sets` is committed first
+    * and the band index is derived from the committed table instead of
+    * re-tokenizing the corpus.
     */
-  def bandIndexFromToks(toks: DataFrame, seeds: Int = 16, bands: Int = 8): DataFrame =
-    bandedKeys(toks, seeds, bands)
+  def bandIndexFromToks(toks: DataFrame): DataFrame = bandedKeys(toks)
 
   /** The committed dedup state of a corpus: `toks` = [[tokenSetTable]]
     * (doc_id, toks sorted-distinct — one row per document), `banded` =
-    * [[bandIndex]] (doc_id, bandKey). At 100 TB these two snapshot
-    * tables ARE what the MinHash family reads — every `...FromState`
-    * entry point below runs without touching a byte of document text.
+    * the MinHash-LSH band index (doc_id, bandKey), one row per document
+    * per band. At 100 TB these two snapshot tables ARE what the MinHash
+    * family reads — every operator below that takes a `DedupState` runs
+    * without touching a byte of document text, and a new crawl
+    * deduplicates against them without touching a byte of the
+    * already-ingested corpus (see [[incrementalKeep]]).
     */
   final case class DedupState(toks: DataFrame, banded: DataFrame)
 
@@ -402,9 +398,9 @@ object Dedup {
     * (Catalyst does not deduplicate common subtrees across joins, so
     * the band index must be derived from the same token-set frame).
     */
-  def state(docs: DataFrame, seeds: Int = 16, bands: Int = 8): DedupState = {
+  def state(docs: DataFrame): DedupState = {
     val t = tokenSetTable(docs)
-    DedupState(t, bandedKeys(t, seeds, bands))
+    DedupState(t, bandedKeys(t))
   }
 
   /** Incremental near-dup verdicts for a delta crawl against an
@@ -416,9 +412,10 @@ object Dedup {
     * is [[nearDupKeep]] on the delta alone; composition of the two is
     * the full recrawl story).
     *
-    * Scale shape: the base side enters only through its committed band
-    * index and token-set table ([[bandIndex]] / snapshot tables) — the
-    * band join touches `|delta| × bands` probe rows against a
+    * Scale shape: the base side enters only through its dedup state —
+    * in production both frames come off snapshot tables, so the delta
+    * run's cost is O(delta) plus the pruned index/token reads. The band
+    * join touches `|delta| × bands` probe rows against a
     * bucket-partitioned index, and the verify join reads only the
     * candidate-matched base token rows (a semi-join-pruned read at the
     * storage layer). Nothing rescans base bodies. `maxBucket` optionally
@@ -427,45 +424,14 @@ object Dedup {
     * degenerate shingle, not a dup signal); default off = exact rule.
     */
   def incrementalKeep(
-      base: DataFrame,
+      base: DedupState,
       delta: DataFrame,
       thetaPct: Int = 90,
-      seeds: Int = 16,
-      bands: Int = 8,
       maxBucket: Option[Int] = None
   ): DataFrame = {
-    // one tokenization subtree for both base-side artifacts — Catalyst
-    // does not deduplicate common subtrees across joins, so deriving the
-    // band index from the same token-set frame halves the base scan
-    val bt = tokenSetTable(base)
-    incrementalKeepIndexed(
-      bandedKeys(bt, seeds, bands),
-      bt,
-      delta,
-      thetaPct,
-      seeds,
-      bands,
-      maxBucket
-    )
-  }
-
-  /** [[incrementalKeep]] with the base corpus supplied as its committed
-    * artifacts: `baseIndex` = (doc_id, bandKey), `baseToks` =
-    * (doc_id, toks sorted-distinct). This is the production entry point
-    * — both frames come off snapshot tables, so the delta run's cost is
-    * O(delta) plus the pruned index/token reads.
-    */
-  def incrementalKeepIndexed(
-      baseIndex: DataFrame,
-      baseToks: DataFrame,
-      delta: DataFrame,
-      thetaPct: Int = 90,
-      seeds: Int = 16,
-      bands: Int = 8,
-      maxBucket: Option[Int] = None
-  ): DataFrame = {
+    val baseIndex = base.banded
     val dt = tokenSetTable(delta)
-    val dband = bandedKeys(dt, seeds, bands)
+    val dband = bandedKeys(dt)
     // map-side-combined count + semi-join, NOT a count-over-window: the
     // window form sorts the hottest bucket's whole population in one
     // task — the guard against skew must itself be skew-safe
@@ -488,7 +454,7 @@ object Dedup {
     val uni = size(col("dtoks")) + size(col("btoks")) - inter
     val ver = cand
       .join(dt.select(col("doc_id").as("delta_id"), col("toks").as("dtoks")), "delta_id")
-      .join(baseToks.select(col("doc_id").as("base_id"), col("toks").as("btoks")), "base_id")
+      .join(base.toks.select(col("doc_id").as("base_id"), col("toks").as("btoks")), "base_id")
       .where(lit(100) * inter >= lit(thetaPct) * uni)
       .groupBy("delta_id")
       .agg(min("base_id").as("dup_of"))
@@ -506,22 +472,12 @@ object Dedup {
     * shingle->minhash->band->bucket-join, then exact token-set Jaccard
     * verification at thetaPct. Candidates inside a band bucket pair
     * sorted-window style (each doc with the next `cap` docs by doc_id) —
-    * deterministic and never quadratic in bucket size.
+    * deterministic and never quadratic in bucket size. Candidate
+    * generation reads the state's (doc_id, bandKey) index and
+    * verification its (doc_id, toks) table; document text is never
+    * touched.
     */
   def minhashLshPairs(
-      docs: DataFrame,
-      thetaPct: Int = 90,
-      seeds: Int = 16,
-      bands: Int = 8,
-      cap: Int = DefaultLeadCap
-  ): DataFrame =
-    minhashLshPairsFromState(state(docs, seeds, bands), thetaPct, cap)
-
-  /** [[minhashLshPairs]] over committed dedup state — candidate
-    * generation reads the (doc_id, bandKey) index and verification the
-    * (doc_id, toks) table; document text is never touched.
-    */
-  def minhashLshPairsFromState(
       st: DedupState,
       thetaPct: Int = 90,
       cap: Int = DefaultLeadCap
@@ -579,8 +535,8 @@ object Dedup {
     * (experiments/wikiqa/utils/cluster_and_deduplication.py:207-259);
     * here the cluster relation is the LSH pair graph itself and the
     * fixpoint is the scalable min-label propagation.
-    */
-  /** @param driverPairThreshold adaptive small-graph path (same shape as
+    *
+    * @param driverPairThreshold adaptive small-graph path (same shape as
     *   ClusterGraph's dictionary probe): `take(threshold+1)` on the pair
     *   set is incremental — when the graph is small the union-find runs
     *   driver-side and the whole grouping is ONE Spark job instead of
@@ -590,24 +546,13 @@ object Dedup {
     *   min-label fixpoint runs unchanged.
     */
   def minhashGroups(
-      docs: DataFrame,
-      thetaPct: Int = 90,
-      seeds: Int = 16,
-      bands: Int = 8,
-      cap: Int = DefaultLeadCap,
-      driverPairThreshold: Int = 2000000
-  ): DataFrame =
-    minhashGroupsFromState(state(docs, seeds, bands), thetaPct, cap, driverPairThreshold)
-
-  /** [[minhashGroups]] over committed dedup state. */
-  def minhashGroupsFromState(
       st: DedupState,
       thetaPct: Int = 90,
       cap: Int = DefaultLeadCap,
       driverPairThreshold: Int = 2000000
   ): DataFrame =
     groupsFromPairs(
-      minhashLshPairsFromState(st, thetaPct, cap).select(col("a"), col("b")),
+      minhashLshPairs(st, thetaPct, cap).select(col("a"), col("b")),
       "doc_id",
       driverPairThreshold
     )
@@ -693,29 +638,18 @@ object Dedup {
     * Shape at scale: the group table is the (small) duplicate subset —
     * the left join back to the corpus is AQE-broadcastable; everything
     * upstream is the banded-LSH + CC shape documented on
-    * [[minhashGroups]].
+    * [[minhashGroups]]. The doc universe is the state's token-set table
+    * (one row per document by construction), so the keep list needs no
+    * corpus read at all.
     */
   def nearDupKeep(
-      docs: DataFrame,
-      thetaPct: Int = 90,
-      seeds: Int = 16,
-      bands: Int = 8,
-      cap: Int = DefaultLeadCap
-  ): DataFrame =
-    nearDupKeepFromState(state(docs, seeds, bands), thetaPct, cap)
-
-  /** [[nearDupKeep]] over committed dedup state — the doc universe is
-    * the token-set table itself (one row per document by construction),
-    * so the keep list needs no corpus read at all.
-    */
-  def nearDupKeepFromState(
       st: DedupState,
       thetaPct: Int = 90,
       cap: Int = DefaultLeadCap
   ): DataFrame =
     st.toks
       .select(col("doc_id"))
-      .join(minhashGroupsFromState(st, thetaPct, cap), Seq("doc_id"), "left")
+      .join(minhashGroups(st, thetaPct, cap), Seq("doc_id"), "left")
       .select(
         col("doc_id"),
         col("dup_group"),
@@ -740,21 +674,11 @@ object Dedup {
     * shape documented on [[minhashGroups]].
     */
   def softWeights(
-      docs: DataFrame,
-      thetaPct: Int = 90,
-      seeds: Int = 16,
-      bands: Int = 8,
-      cap: Int = DefaultLeadCap
-  ): DataFrame =
-    softWeightsFromState(state(docs, seeds, bands), thetaPct, cap)
-
-  /** [[softWeights]] over committed dedup state. */
-  def softWeightsFromState(
       st: DedupState,
       thetaPct: Int = 90,
       cap: Int = DefaultLeadCap
   ): DataFrame = {
-    val grp = graft.util.Materialize.stage(minhashGroupsFromState(st, thetaPct, cap))
+    val grp = graft.util.Materialize.stage(minhashGroups(st, thetaPct, cap))
     val sz = grp.groupBy("dup_group").agg(count(lit(1)).as("group_size"))
     st.toks
       .select(col("doc_id"))
@@ -781,21 +705,11 @@ object Dedup {
     * groups.
     */
   def clusterSizeProfile(
-      docs: DataFrame,
-      thetaPct: Int = 90,
-      seeds: Int = 16,
-      bands: Int = 8,
-      cap: Int = DefaultLeadCap
-  ): DataFrame =
-    clusterSizeProfileFromState(state(docs, seeds, bands), thetaPct, cap)
-
-  /** [[clusterSizeProfile]] over committed dedup state. */
-  def clusterSizeProfileFromState(
       st: DedupState,
       thetaPct: Int = 90,
       cap: Int = DefaultLeadCap
   ): DataFrame =
-    softWeightsFromState(st, thetaPct, cap)
+    softWeights(st, thetaPct, cap)
       .groupBy("group_size")
       .agg(count(lit(1)).as("n_docs"))
       .select(
@@ -910,30 +824,19 @@ object Dedup {
     * before its bytes are fetched again). Output:
     * (source, n_docs, n_dropped, drop_permille).
     *
-    * Shape at scale: the shared banded-LSH keep pass, one doc-keyed
-    * join to attach the source column, and a source-keyed
+    * Shape at scale: the shared banded-LSH keep pass over the dedup
+    * state, one doc-keyed join to attach the source column (`docs` is
+    * read only for its (doc_id, source) columns — a column-pruned
+    * metadata scan, never the bodies), and a source-keyed
     * partial-aggregated exchange bounded by the domain vocabulary.
     */
   def sourceDupProfile(
-      docs: DataFrame,
-      thetaPct: Int = 90,
-      seeds: Int = 16,
-      bands: Int = 8,
-      cap: Int = DefaultLeadCap
-  ): DataFrame =
-    sourceDupProfileFromState(state(docs, seeds, bands), docs, thetaPct, cap)
-
-  /** [[sourceDupProfile]] over committed dedup state; `docs` is read
-    * only for its (doc_id, source) columns — a column-pruned metadata
-    * scan, never the bodies.
-    */
-  def sourceDupProfileFromState(
       st: DedupState,
       docs: DataFrame,
       thetaPct: Int = 90,
       cap: Int = DefaultLeadCap
   ): DataFrame =
-    nearDupKeepFromState(st, thetaPct, cap)
+    nearDupKeep(st, thetaPct, cap)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
       .groupBy("source")
       .agg(

@@ -10,7 +10,7 @@ import graft.ops.{Curation, Dedup, Multimodal, Sampling, Similarity, TextAnalysi
   */
 object OpsQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Queries.Q
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
@@ -110,7 +110,7 @@ object OpsQueries {
       "WHERE 100 * len(list_intersect(a.grams, b.grams)) >= 90 * least(len(a.grams), len(b.grams))"
   }
 
-  val dedupRecall: Q = (s, dir) => Dedup.lshRecallFromState(dedupState(s, dir), docs(s, dir), thetaPct = 90)
+  val dedupRecall: Q = (s, dir) => Dedup.lshRecall(dedupState(s, dir), docs(s, dir), thetaPct = 90)
 
   /** The exact side is the all-pairs same-source Jaccard rule; the LSH
     * side re-uses the verified minhash pair CTEs restricted to the same
@@ -131,7 +131,7 @@ object OpsQueries {
       "SELECT n_exact, n_lsh, n_both, " +
       "CAST((CAST(n_both AS HUGEINT) * 1000) // greatest(n_exact, 1) AS BIGINT) AS recall_permille FROM c"
 
-  val dedupMinhash: Q = (s, dir) => Dedup.minhashLshPairsFromState(dedupState(s, dir), thetaPct = 90)
+  val dedupMinhash: Q = (s, dir) => Dedup.minhashLshPairs(dedupState(s, dir), thetaPct = 90)
 
   /** CTE chain ending in `mhp(a, b, inter, uni)` — the verified
     * MinHash-LSH pair set; shared by the pair and group oracles.
@@ -166,7 +166,7 @@ object OpsQueries {
   val dedupIncremental: Q = (s, dir) => {
     val d = docs(s, dir)
     Dedup.incrementalKeep(
-      d.where(col("doc_id") % 4 =!= 3),
+      Dedup.state(d.where(col("doc_id") % 4 =!= 3)),
       d.where(col("doc_id") % 4 === 3),
       thetaPct = 90
     )
@@ -175,7 +175,7 @@ object OpsQueries {
   /** Shared md5 minhash (16 seeds) + 8-band key CTEs over an input CTE
     * `src` holding (doc_id, toks); emits `${p}band` = (doc_id, bandKey).
     * The ONE SQL site for the signature/band rule (the Scala side's
-    * single site is Dedup.minhashSig/bandedKeys) — both the batch pair
+    * single site is Dedup.minhashSig/bandKeyCols) — both the batch pair
     * oracle and the incremental oracle compose it.
     *
     * NULL parity with Spark's concat_ws: an empty-token doc has ALL
@@ -219,7 +219,7 @@ object OpsQueries {
       "FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 3) d " +
       "LEFT JOIN ver v ON v.delta_id = d.doc_id"
 
-  val dedupGroups: Q = (s, dir) => Dedup.minhashGroupsFromState(dedupState(s, dir), thetaPct = 90)
+  val dedupGroups: Q = (s, dir) => Dedup.minhashGroups(dedupState(s, dir), thetaPct = 90)
 
   /** Recursive min-label walk over the verified pair graph — identical
     * fixpoint to the Spark connected-components loop.
@@ -236,7 +236,7 @@ object OpsQueries {
     * composes the shared MinHash pair CTEs + the CC walk + a left join
     * back to every document.
     */
-  val dedupKeep: Q = (s, dir) => Dedup.nearDupKeepFromState(dedupState(s, dir), thetaPct = 90)
+  val dedupKeep: Q = (s, dir) => Dedup.nearDupKeep(dedupState(s, dir), thetaPct = 90)
 
   val dedupKeepSql: String =
     s"WITH RECURSIVE $minhashPairCtes, " +
@@ -286,7 +286,7 @@ object OpsQueries {
     * domain-level drop-rate table; the oracle nests the full
     * recursive keep-list query as a derived table.
     */
-  val dedupSourceProfile: Q = (s, dir) => Dedup.sourceDupProfileFromState(dedupState(s, dir), docs(s, dir), thetaPct = 90)
+  val dedupSourceProfile: Q = (s, dir) => Dedup.sourceDupProfile(dedupState(s, dir), docs(s, dir), thetaPct = 90)
 
   val dedupSourceProfileSql: String =
     s"SELECT d2.source, CAST(count(*) AS BIGINT) AS n_docs, " +
@@ -1701,7 +1701,7 @@ object OpsQueries {
     * composes the shared MinHash pair CTEs + the CC walk with a size
     * aggregate and the corpus left join.
     */
-  val dedupWeights: Q = (s, dir) => Dedup.softWeightsFromState(dedupState(s, dir), thetaPct = 90)
+  val dedupWeights: Q = (s, dir) => Dedup.softWeights(dedupState(s, dir), thetaPct = 90)
 
   val dedupWeightsSql: String =
     s"WITH RECURSIVE $minhashPairCtes, " +
@@ -1721,7 +1721,7 @@ object OpsQueries {
     * included — the oracle wraps the weights statement as a derived
     * table and folds it.
     */
-  val dedupSizes: Q = (s, dir) => Dedup.clusterSizeProfileFromState(dedupState(s, dir), thetaPct = 90)
+  val dedupSizes: Q = (s, dir) => Dedup.clusterSizeProfile(dedupState(s, dir), thetaPct = 90)
 
   val dedupSizesSql: String =
     s"SELECT group_size, CAST(count(*) AS BIGINT) AS n_docs, " +
@@ -1764,7 +1764,7 @@ object OpsQueries {
     docs(s, dir)
       .select(col("doc_id"), col("source"), col("n_chars"))
       .join(
-        Dedup.nearDupKeepFromState(dedupState(s, dir), thetaPct = 90).select("doc_id", "keep"),
+        Dedup.nearDupKeep(dedupState(s, dir), thetaPct = 90).select("doc_id", "keep"),
         "doc_id"
       )
       .groupBy("source")
@@ -1823,203 +1823,103 @@ object OpsQueries {
 
   // ----- registry -----
 
-  val all: Map[String, Q] = Map(
-    "dedup_exact" -> dedupExact,
-    "dedup_jaccard" -> dedupJaccard,
-    "dedup_threshold_curve" -> dedupThresholdCurve,
-    "dedup_minhash" -> dedupMinhash,
-    "dedup_incremental" -> dedupIncremental,
-    "dedup_groups" -> dedupGroups,
-    "dedup_keep" -> dedupKeep,
-    "dedup_source_profile" -> dedupSourceProfile,
-    "text_hapax" -> textHapax,
-    "text_novelty" -> textNovelty,
-    "text_skipgrams" -> textSkipgrams,
-    "dedup_simhash" -> dedupSimhash,
-    "dedup_simhash_pairs" -> dedupSimhashPairs,
-    "dedup_edit_verify" -> dedupEditVerify,
-    "emb_neardup" -> embNearDup,
-    "emb_hard_negatives" -> embHardNegatives,
-    "semantic_groups" -> semanticGroups,
-    "ann_topk" -> annTopK,
-    "ann_buckets" -> annBuckets,
-    "ann_lsh" -> annLsh,
-    "ann_ivf" -> annIvf,
-    "ann_pq" -> annPq,
-    "text_langid" -> textLangId,
-    "text_lang_confusion" -> textLangConfusion,
-    "text_code_detect" -> textCodeDetect,
-    "text_quality" -> textQuality,
-    "text_quality_corr" -> textQualityCorr,
-    "text_token_counts" -> textTokenCounts,
-    "text_readability" -> textReadability,
-    "text_keywords" -> textKeywords,
-    "text_sketch" -> textSketch,
-    "text_cms" -> textCms,
-    "emb_centroids" -> embCentroids,
-    "emb_spread" -> embSpread,
-    "lm_bigrams" -> lmBigrams,
-    "text_lm_score" -> textLmScore,
-    "lm_trigram_score" -> lmTrigramScore,
-    "source_drift" -> sourceDrift,
-    "text_fingerprints" -> textFingerprints,
-    "line_dedup" -> lineDedup,
-    "text_boilerplate" -> textBoilerplate,
-    "ann_lsh_probe" -> annLshProbe,
-    "ann_recall" -> annRecall,
-    "ann_sq" -> annSq,
-    "ann_recall_sq" -> annRecallSq,
-    "ann_hamming" -> annHamming,
-    "ann_recall_hamming" -> annRecallHamming,
-    "dedup_contain" -> dedupContain,
-    "dedup_recall" -> dedupRecall,
-    "dup_grams" -> dupGrams,
-    "text_bm25" -> textBm25,
-    "text_rank_fusion" -> textRankFusion,
-    "stratified_sample" -> stratifiedSample,
-    "inverted_index" -> invertedIndex,
-    "domain_rollup" -> domainRollup,
-    "domain_pivot" -> domainPivot,
-    "length_quantiles" -> lengthQuantiles,
-    "text_repetition" -> textRepetition,
-    "text_diversity" -> textDiversity,
-    "text_decontam" -> textDecontam,
-    "text_decontam_bloom" -> textDecontamBloom,
-    "domain_stats" -> domainStats,
-    "corpus_curate" -> corpusCurate,
-    "url_canon" -> urlCanon,
-    "mixture_sample" -> mixtureSample,
-    "data_split" -> dataSplit,
-    "length_histogram" -> lengthHistogram,
-    "vocab_topk" -> vocabTopK,
-    "bpe_merges" -> bpeMerges,
-    "bpe_segment" -> bpeSegment,
-    "source_overlap" -> sourceOverlap,
-    "source_overlap_capped" -> sourceOverlapCapped,
-    "seq_pack" -> seqPack,
-    "quality_sample" -> qualitySample,
-    "quality_deciles" -> qualityDeciles,
-    "corpus_keep" -> corpusKeep,
-    "corpus_funnel" -> corpusFunnel,
-    "text_redact" -> textRedact,
-    "multimodal_meta" -> multimodalMeta,
-    "multimodal_sizes" -> multimodalSizes,
-    "multimodal_frames" -> multimodalFrames,
-    "multimodal_resize" -> multimodalResize,
-    "multimodal_features" -> multimodalFeatures,
-    "multimodal_phash" -> multimodalPhash,
-    "dedup_weights" -> dedupWeights,
-    "text_zipf" -> textZipf,
-    "text_heaps" -> textHeaps,
-    "multimodal_dedup" -> multimodalDedup,
-    "emb_separation" -> embSeparation,
-    "emb_quantize" -> embQuantize,
-    "emb_outliers" -> embOutliers,
-    "emb_norms" -> embNorms,
-    "emb_margin" -> embMargin,
-    "emb_dim_stats" -> embDimStats,
-    "dedup_sizes" -> dedupSizes,
-    "dedup_state_stats" -> dedupStateStats,
-    "dedup_savings" -> dedupSavings
-  )
-
-  val oracles: Map[String, String] = Map(
-    "dedup_exact" -> dedupExactSql,
-    "dedup_jaccard" -> dedupJaccardSql,
-    "dedup_threshold_curve" -> dedupThresholdCurveSql,
-    "dedup_minhash" -> dedupMinhashSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "dedup_groups" -> dedupGroupsSql,
-    "dedup_keep" -> dedupKeepSql,
-    "dedup_source_profile" -> dedupSourceProfileSql,
-    "text_hapax" -> textHapaxSql,
-    "text_novelty" -> textNoveltySql,
-    "text_skipgrams" -> textSkipgramsSql,
-    "dedup_simhash" -> dedupSimhashSql,
-    "dedup_simhash_pairs" -> dedupSimhashPairsSql,
-    "dedup_edit_verify" -> dedupEditVerifySql,
-    "emb_neardup" -> embNearDupSql,
-    "emb_hard_negatives" -> embHardNegativesSql,
-    "semantic_groups" -> semanticGroupsSql,
-    "ann_topk" -> annTopKSql,
-    "ann_buckets" -> annBucketsSql,
-    "ann_lsh" -> annLshSql,
-    "ann_ivf" -> annIvfSql,
-    "ann_pq" -> annPqSql,
-    "text_langid" -> textLangIdSql,
-    "text_lang_confusion" -> textLangConfusionSql,
-    "text_code_detect" -> textCodeDetectSql,
-    "text_quality" -> textQualitySql,
-    "text_quality_corr" -> textQualityCorrSql,
-    "text_token_counts" -> textTokenCountsSql,
-    "text_readability" -> textReadabilitySql,
-    "text_keywords" -> textKeywordsSql,
-    "text_sketch" -> textSketchSql,
-    "text_cms" -> textCmsSql,
-    "emb_centroids" -> embCentroidsSql,
-    "emb_spread" -> embSpreadSql,
-    "lm_bigrams" -> lmBigramsSql,
-    "text_lm_score" -> textLmScoreSql,
-    "lm_trigram_score" -> lmTrigramScoreSql,
-    "source_drift" -> sourceDriftSql,
-    "text_fingerprints" -> textFingerprintsSql,
-    "line_dedup" -> lineDedupSql,
-    "text_boilerplate" -> textBoilerplateSql,
-    "ann_lsh_probe" -> annLshProbeSql,
-    "ann_recall" -> annRecallSql,
-    "ann_sq" -> annSqSql,
-    "ann_recall_sq" -> annRecallSqSql,
-    "ann_hamming" -> annHammingSql,
-    "ann_recall_hamming" -> annRecallHammingSql,
-    "dedup_contain" -> dedupContainSql,
-    "dedup_recall" -> dedupRecallSql,
-    "dup_grams" -> dupGramsSql,
-    "text_bm25" -> textBm25Sql,
-    "text_rank_fusion" -> textRankFusionSql,
-    "stratified_sample" -> stratifiedSampleSql,
-    "inverted_index" -> invertedIndexSql,
-    "domain_rollup" -> domainRollupSql,
-    "domain_pivot" -> domainPivotSql,
-    "length_quantiles" -> lengthQuantilesSql,
-    "text_repetition" -> textRepetitionSql,
-    "text_diversity" -> textDiversitySql,
-    "text_decontam" -> textDecontamSql,
-    "text_decontam_bloom" -> textDecontamBloomSql,
-    "domain_stats" -> domainStatsSql,
-    "corpus_curate" -> corpusCurateSql,
-    "url_canon" -> urlCanonSql,
-    "mixture_sample" -> mixtureSampleSql,
-    "data_split" -> dataSplitSql,
-    "length_histogram" -> lengthHistogramSql,
-    "vocab_topk" -> vocabTopKSql,
-    "bpe_merges" -> bpeMergesSql,
-    "bpe_segment" -> bpeSegmentSql,
-    "source_overlap" -> sourceOverlapSql,
-    "source_overlap_capped" -> sourceOverlapCappedSql,
-    "seq_pack" -> seqPackSql,
-    "quality_sample" -> qualitySampleSql,
-    "quality_deciles" -> qualityDecilesSql,
-    "corpus_keep" -> corpusKeepSql,
-    "corpus_funnel" -> corpusFunnelSql,
-    "text_redact" -> textRedactSql,
-    "multimodal_meta" -> multimodalMetaSql,
-    "multimodal_sizes" -> multimodalSizesSql,
-    "multimodal_frames" -> multimodalFramesSql,
-    "multimodal_resize" -> multimodalResizeSql,
-    "multimodal_features" -> multimodalFeaturesSql,
-    "multimodal_phash" -> multimodalPhashSql,
-    "dedup_weights" -> dedupWeightsSql,
-    "text_zipf" -> textZipfSql,
-    "text_heaps" -> textHeapsSql,
-    "multimodal_dedup" -> multimodalDedupSql,
-    "emb_separation" -> embSeparationSql,
-    "emb_quantize" -> embQuantizeSql,
-    "emb_outliers" -> embOutliersSql,
-    "emb_norms" -> embNormsSql,
-    "emb_margin" -> embMarginSql,
-    "emb_dim_stats" -> embDimStatsSql,
-    "dedup_sizes" -> dedupSizesSql,
-    "dedup_state_stats" -> dedupStateStatsSql,
-    "dedup_savings" -> dedupSavingsSql
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("dedup_exact", dedupExact, dedupExactSql),
+    QueryDef("dedup_jaccard", dedupJaccard, dedupJaccardSql),
+    QueryDef("dedup_threshold_curve", dedupThresholdCurve, dedupThresholdCurveSql),
+    QueryDef("dedup_minhash", dedupMinhash, dedupMinhashSql),
+    QueryDef("dedup_incremental", dedupIncremental, dedupIncrementalSql),
+    QueryDef("dedup_groups", dedupGroups, dedupGroupsSql),
+    QueryDef("dedup_keep", dedupKeep, dedupKeepSql),
+    QueryDef("dedup_source_profile", dedupSourceProfile, dedupSourceProfileSql),
+    QueryDef("text_hapax", textHapax, textHapaxSql),
+    QueryDef("text_novelty", textNovelty, textNoveltySql),
+    QueryDef("text_skipgrams", textSkipgrams, textSkipgramsSql),
+    QueryDef("dedup_simhash", dedupSimhash, dedupSimhashSql),
+    QueryDef("dedup_simhash_pairs", dedupSimhashPairs, dedupSimhashPairsSql),
+    QueryDef("dedup_edit_verify", dedupEditVerify, dedupEditVerifySql),
+    QueryDef("emb_neardup", embNearDup, embNearDupSql),
+    QueryDef("emb_hard_negatives", embHardNegatives, embHardNegativesSql),
+    QueryDef("semantic_groups", semanticGroups, semanticGroupsSql),
+    QueryDef("ann_topk", annTopK, annTopKSql),
+    QueryDef("ann_buckets", annBuckets, annBucketsSql),
+    QueryDef("ann_lsh", annLsh, annLshSql),
+    QueryDef("ann_ivf", annIvf, annIvfSql),
+    QueryDef("ann_pq", annPq, annPqSql),
+    QueryDef("text_langid", textLangId, textLangIdSql),
+    QueryDef("text_lang_confusion", textLangConfusion, textLangConfusionSql),
+    QueryDef("text_code_detect", textCodeDetect, textCodeDetectSql),
+    QueryDef("text_quality", textQuality, textQualitySql),
+    QueryDef("text_quality_corr", textQualityCorr, textQualityCorrSql),
+    QueryDef("text_token_counts", textTokenCounts, textTokenCountsSql),
+    QueryDef("text_readability", textReadability, textReadabilitySql),
+    QueryDef("text_keywords", textKeywords, textKeywordsSql),
+    QueryDef("text_sketch", textSketch, textSketchSql),
+    QueryDef("text_cms", textCms, textCmsSql),
+    QueryDef("emb_centroids", embCentroids, embCentroidsSql),
+    QueryDef("emb_spread", embSpread, embSpreadSql),
+    QueryDef("lm_bigrams", lmBigrams, lmBigramsSql),
+    QueryDef("text_lm_score", textLmScore, textLmScoreSql),
+    QueryDef("lm_trigram_score", lmTrigramScore, lmTrigramScoreSql),
+    QueryDef("source_drift", sourceDrift, sourceDriftSql),
+    QueryDef("text_fingerprints", textFingerprints, textFingerprintsSql),
+    QueryDef("line_dedup", lineDedup, lineDedupSql),
+    QueryDef("text_boilerplate", textBoilerplate, textBoilerplateSql),
+    QueryDef("ann_lsh_probe", annLshProbe, annLshProbeSql),
+    QueryDef("ann_recall", annRecall, annRecallSql),
+    QueryDef("ann_sq", annSq, annSqSql),
+    QueryDef("ann_recall_sq", annRecallSq, annRecallSqSql),
+    QueryDef("ann_hamming", annHamming, annHammingSql),
+    QueryDef("ann_recall_hamming", annRecallHamming, annRecallHammingSql),
+    QueryDef("dedup_contain", dedupContain, dedupContainSql),
+    QueryDef("dedup_recall", dedupRecall, dedupRecallSql),
+    QueryDef("dup_grams", dupGrams, dupGramsSql),
+    QueryDef("text_bm25", textBm25, textBm25Sql),
+    QueryDef("text_rank_fusion", textRankFusion, textRankFusionSql),
+    QueryDef("stratified_sample", stratifiedSample, stratifiedSampleSql),
+    QueryDef("inverted_index", invertedIndex, invertedIndexSql),
+    QueryDef("domain_rollup", domainRollup, domainRollupSql),
+    QueryDef("domain_pivot", domainPivot, domainPivotSql),
+    QueryDef("length_quantiles", lengthQuantiles, lengthQuantilesSql),
+    QueryDef("text_repetition", textRepetition, textRepetitionSql),
+    QueryDef("text_diversity", textDiversity, textDiversitySql),
+    QueryDef("text_decontam", textDecontam, textDecontamSql),
+    QueryDef("text_decontam_bloom", textDecontamBloom, textDecontamBloomSql),
+    QueryDef("domain_stats", domainStats, domainStatsSql),
+    QueryDef("corpus_curate", corpusCurate, corpusCurateSql),
+    QueryDef("url_canon", urlCanon, urlCanonSql),
+    QueryDef("mixture_sample", mixtureSample, mixtureSampleSql),
+    QueryDef("data_split", dataSplit, dataSplitSql),
+    QueryDef("length_histogram", lengthHistogram, lengthHistogramSql),
+    QueryDef("vocab_topk", vocabTopK, vocabTopKSql),
+    QueryDef("bpe_merges", bpeMerges, bpeMergesSql),
+    QueryDef("bpe_segment", bpeSegment, bpeSegmentSql),
+    QueryDef("source_overlap", sourceOverlap, sourceOverlapSql),
+    QueryDef("source_overlap_capped", sourceOverlapCapped, sourceOverlapCappedSql),
+    QueryDef("seq_pack", seqPack, seqPackSql),
+    QueryDef("quality_sample", qualitySample, qualitySampleSql),
+    QueryDef("quality_deciles", qualityDeciles, qualityDecilesSql),
+    QueryDef("corpus_keep", corpusKeep, corpusKeepSql),
+    QueryDef("corpus_funnel", corpusFunnel, corpusFunnelSql),
+    QueryDef("text_redact", textRedact, textRedactSql),
+    QueryDef("multimodal_meta", multimodalMeta, multimodalMetaSql),
+    QueryDef("multimodal_sizes", multimodalSizes, multimodalSizesSql),
+    QueryDef("multimodal_frames", multimodalFrames, multimodalFramesSql),
+    QueryDef("multimodal_resize", multimodalResize, multimodalResizeSql),
+    QueryDef("multimodal_features", multimodalFeatures, multimodalFeaturesSql),
+    QueryDef("multimodal_phash", multimodalPhash, multimodalPhashSql),
+    QueryDef("dedup_weights", dedupWeights, dedupWeightsSql),
+    QueryDef("text_zipf", textZipf, textZipfSql),
+    QueryDef("text_heaps", textHeaps, textHeapsSql),
+    QueryDef("multimodal_dedup", multimodalDedup, multimodalDedupSql),
+    QueryDef("emb_separation", embSeparation, embSeparationSql),
+    QueryDef("emb_quantize", embQuantize, embQuantizeSql),
+    QueryDef("emb_outliers", embOutliers, embOutliersSql),
+    QueryDef("emb_norms", embNorms, embNormsSql),
+    QueryDef("emb_margin", embMargin, embMarginSql),
+    QueryDef("emb_dim_stats", embDimStats, embDimStatsSql),
+    QueryDef("dedup_sizes", dedupSizes, dedupSizesSql),
+    QueryDef("dedup_state_stats", dedupStateStats, dedupStateStatsSql),
+    QueryDef("dedup_savings", dedupSavings, dedupSavingsSql)
   )
 }

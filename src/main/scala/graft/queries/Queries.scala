@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.extract.TokenRules
 
 /** Driver-facing query registry: every operator from SURVEY.md §2 that is
-  * runnable over the scale-factor parquet tables, paired (in `oracle`)
-  * with the exact ANSI SQL the DuckDB oracle runs on the same tables.
+  * runnable over the scale-factor parquet tables, paired (in its
+  * [[QueryDef]]) with the exact ANSI SQL the DuckDB oracle runs on the
+  * same tables.
   *
   * Conventions shared with the oracle (the driver hash-compares after
   * sorting columns by name, so names must match exactly):
@@ -2642,239 +2643,121 @@ object Queries {
   // Registry
   // ---------------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "kg_mentions" -> kgMentions,
-    "kg_doc_density" -> kgDocDensity,
-    "kg_entities" -> kgEntities,
-    "kg_triples" -> kgTriples,
-    "kg_edges" -> kgEdges,
-    "kg_aggregate" -> kgAggregate,
-    "kg_diff" -> kgDiff,
-    "kg_churn" -> kgChurn,
-    "kg_degree" -> kgDegree,
-    "kg_pred_counts" -> kgPredCounts,
-    "kg_top_entities" -> kgTopEntities,
-    "kg_stats" -> kgStats,
-    "kg_top_relations" -> kgTopRelations,
-    "kg_nx_edges" -> kgNxEdges,
-    "kg_2hop" -> kg2Hop,
-    "kg_substring" -> kgSubstring,
-    "kg_embed" -> kgEmbed,
-    "kg_embed_rel" -> kgEmbedRel,
-    "kg_viz" -> kgViz,
-    "kg_retrieve" -> kgRetrieve,
-    "kg_retrieve_context" -> kgRetrieveContext,
-    "kg_normalize" -> kgNormalize,
-    "kg_cluster_assign" -> kgClusterAssign,
-    "kg_cluster_map" -> kgClusterMap,
-    "kg_cluster_rewrite" -> kgClusterRewrite,
-    "kg_components" -> kgComponents,
-    "kg_component_stats" -> kgComponentStats,
-    "kg_cc_incremental" -> kgCcIncremental,
-    "kg_pagerank" -> kgPageRank,
-    "kg_hits" -> kgHits,
-    "kg_cooc" -> kgCooc,
-    "kg_schema_stats" -> kgSchemaStats,
-    "kg_conflicts" -> kgConflicts,
-    "kg_rule_support" -> kgRuleSupport,
-    "kg_same_as" -> kgSameAs,
-    "kg_entity_types" -> kgEntityTypes,
-    "kg_corroboration" -> kgCorroboration,
-    "kg_provenance" -> kgProvenance,
-    "kg_triple_history" -> kgTripleHistory,
-    "kg_entity_history" -> kgEntityHistory,
-    "kg_blocking_recall" -> kgBlockingRecall,
-    "kg_pred_synonyms" -> kgPredSynonyms,
-    "kg_degree_dist" -> kgDegreeDist,
-    "kg_reciprocity" -> kgReciprocity,
-    "kg_ppr" -> kgPpr,
-    "kg_link_predict" -> kgLinkPredict,
-    "kg_triangles" -> kgTriangles,
-    "kg_edge_support" -> kgEdgeSupport,
-    "kg_katz" -> kgKatz,
-    "kg_lp_holdout" -> kgLpHoldout,
-    "kg_resource_alloc" -> kgResourceAlloc,
-    "kg_richclub" -> kgRichClub,
-    "kg_clustering" -> kgClustering,
-    "kg_transitivity" -> kgTransitivity,
-    "kg_transitive" -> kgTransitive,
-    "kg_degree_mixing" -> kgDegreeMixing,
-    "kg_motifs" -> kgMotifs,
-    "kg_kcore" -> kgKcore,
-    "kg_harmonic" -> kgHarmonic,
-    "kg_reach_curve" -> kgReachCurve,
-    "kg_betweenness" -> kgBetweenness,
-    "kg_ecc" -> kgEcc,
-    "kg_sssp" -> kgSssp,
-    "kg_walks" -> kgWalks,
-    "kg_walk_cooc" -> kgWalkCooc,
-    "kg_ppmi" -> kgPpmi,
-    "kg_bgp" -> kgBgp,
-    "kg_negatives" -> kgNegatives,
-    "kg_communities" -> kgCommunities,
-    "kg_comm_stats" -> kgCommStats,
-    "kg_condense" -> kgCondense,
-    "kg_bowtie" -> kgBowtie,
-    "kg_modularity" -> kgModularity,
-    "kg_predicate_gini" -> kgPredicateGini,
-    "events_sessions" -> eventsSessions,
-    "events_funnel" -> eventsFunnel,
-    "events_cohorts" -> eventsCohorts,
-    "events_retention_curve" -> eventsRetentionCurve,
-    "events_lifecycle" -> eventsLifecycle,
-    "events_rfm" -> eventsRfm,
-    "events_streaks" -> eventsStreaks,
-    "events_dau_wau" -> eventsDauWau,
-    "events_uniques_sketch" -> eventsUniquesSketch,
-    "events_attribution" -> eventsAttribution,
-    "events_activity" -> eventsActivity,
-    "events_asof" -> eventsAsof,
-    "events_range_join" -> eventsRangeJoin,
-    "events_latency_hist" -> eventsLatencyHist,
-    "conv_flatten" -> convFlatten,
-    "conv_stats" -> convStats,
-    "conv_pack" -> convPack,
-    "events_window" -> eventsWindow,
-    "events_user_stats" -> eventsUserStats,
-    "events_props" -> eventsProps,
-    "events_transitions" -> eventsTransitions,
-    "events_trigrams" -> eventsTrigrams,
-    "events_scd" -> eventsScd,
-    "events_sliding" -> eventsSliding,
-    "events_value_stats" -> eventsValueStats,
-    "events_rolling" -> eventsRolling,
-    "events_anomaly" -> eventsAnomaly,
-    "events_seasonality" -> eventsSeasonality,
-    "events_forecast" -> eventsForecast,
-    "events_value_quantiles" -> eventsValueQuantiles,
-    "events_hourly" -> eventsHourly,
-    "events_interarrival" -> eventsInterarrival,
-    "events_debounce" -> eventsDebounce,
-    "q1_agg" -> q1Agg,
-    "q3_shipping" -> q3Shipping,
-    "q5_local_supplier" -> q5LocalSupplier,
-    "q18_large_orders" -> q18LargeOrders,
-    "q4_priority" -> q4Priority,
-    "q6_forecast" -> q6Forecast,
-    "q10_returns" -> q10Returns,
-    "q14_promo" -> q14Promo
-  ) ++ OpsQueries.all
-
-  val oracles: Map[String, String] = Map(
-    "kg_mentions" -> kgMentionsSql,
-    "kg_doc_density" -> kgDocDensitySql,
-    "kg_entities" -> kgEntitiesSql,
-    "kg_triples" -> kgTriplesSql,
-    "kg_edges" -> kgEdgesSql,
-    "kg_aggregate" -> kgAggregateSql,
-    "kg_diff" -> kgDiffSql,
-    "kg_churn" -> kgChurnSql,
-    "kg_degree" -> kgDegreeSql,
-    "kg_pred_counts" -> kgPredCountsSql,
-    "kg_top_entities" -> kgTopEntitiesSql,
-    "kg_stats" -> kgStatsSql,
-    "kg_top_relations" -> kgTopRelationsSql,
-    "kg_nx_edges" -> kgNxEdgesSql,
-    "kg_2hop" -> kg2HopSql,
-    "kg_substring" -> kgSubstringSql,
-    "kg_embed" -> kgEmbedSql,
-    "kg_embed_rel" -> kgEmbedRelSql,
-    "kg_viz" -> kgVizSql,
-    "kg_retrieve" -> kgRetrieveSql,
-    "kg_retrieve_context" -> kgRetrieveContextSql,
-    "kg_normalize" -> kgNormalizeSql,
-    "kg_cluster_assign" -> kgClusterAssignSql,
-    "kg_cluster_map" -> kgClusterMapSql,
-    "kg_cluster_rewrite" -> kgClusterRewriteSql,
-    "kg_components" -> kgComponentsSql,
-    "kg_component_stats" -> kgComponentStatsSql,
-    "kg_cc_incremental" -> kgCcIncrementalSql,
-    "kg_pagerank" -> kgPageRankSql,
-    "kg_hits" -> kgHitsSql,
-    "kg_cooc" -> kgCoocSql,
-    "kg_schema_stats" -> kgSchemaStatsSql,
-    "kg_conflicts" -> kgConflictsSql,
-    "kg_rule_support" -> kgRuleSupportSql,
-    "kg_same_as" -> kgSameAsSql,
-    "kg_entity_types" -> kgEntityTypesSql,
-    "kg_corroboration" -> kgCorroborationSql,
-    "kg_provenance" -> kgProvenanceSql,
-    "kg_triple_history" -> kgTripleHistorySql,
-    "kg_entity_history" -> kgEntityHistorySql,
-    "kg_blocking_recall" -> kgBlockingRecallSql,
-    "kg_pred_synonyms" -> kgPredSynonymsSql,
-    "kg_degree_dist" -> kgDegreeDistSql,
-    "kg_reciprocity" -> kgReciprocitySql,
-    "kg_ppr" -> kgPprSql,
-    "kg_link_predict" -> kgLinkPredictSql,
-    "kg_triangles" -> kgTrianglesSql,
-    "kg_edge_support" -> kgEdgeSupportSql,
-    "kg_katz" -> kgKatzSql,
-    "kg_lp_holdout" -> kgLpHoldoutSql,
-    "kg_resource_alloc" -> kgResourceAllocSql,
-    "kg_richclub" -> kgRichClubSql,
-    "kg_clustering" -> kgClusteringSql,
-    "kg_transitivity" -> kgTransitivitySql,
-    "kg_transitive" -> kgTransitiveSql,
-    "kg_degree_mixing" -> kgDegreeMixingSql,
-    "kg_motifs" -> kgMotifsSql,
-    "kg_kcore" -> kgKcoreSql,
-    "kg_harmonic" -> kgHarmonicSql,
-    "kg_reach_curve" -> kgReachCurveSql,
-    "kg_betweenness" -> kgBetweennessSql,
-    "kg_ecc" -> kgEccSql,
-    "kg_sssp" -> kgSsspSql,
-    "kg_walks" -> kgWalksSql,
-    "kg_walk_cooc" -> kgWalkCoocSql,
-    "kg_ppmi" -> kgPpmiSql,
-    "kg_bgp" -> kgBgpSql,
-    "kg_negatives" -> kgNegativesSql,
-    "kg_communities" -> kgCommunitiesSql,
-    "kg_comm_stats" -> kgCommStatsSql,
-    "kg_condense" -> kgCondenseSql,
-    "kg_bowtie" -> kgBowtieSql,
-    "kg_modularity" -> kgModularitySql,
-    "kg_predicate_gini" -> kgPredicateGiniSql,
-    "events_sessions" -> eventsSessionsSql,
-    "events_funnel" -> eventsFunnelSql,
-    "events_cohorts" -> eventsCohortsSql,
-    "events_retention_curve" -> eventsRetentionCurveSql,
-    "events_lifecycle" -> eventsLifecycleSql,
-    "events_rfm" -> eventsRfmSql,
-    "events_streaks" -> eventsStreaksSql,
-    "events_dau_wau" -> eventsDauWauSql,
-    "events_uniques_sketch" -> eventsUniquesSketchSql,
-    "events_attribution" -> eventsAttributionSql,
-    "events_activity" -> eventsActivitySql,
-    "events_asof" -> eventsAsofSql,
-    "events_range_join" -> eventsRangeJoinSql,
-    "events_latency_hist" -> eventsLatencyHistSql,
-    "conv_flatten" -> convFlattenSql,
-    "conv_stats" -> convStatsSql,
-    "conv_pack" -> convPackSql,
-    "events_window" -> eventsWindowSql,
-    "events_user_stats" -> eventsUserStatsSql,
-    "events_props" -> eventsPropsSql,
-    "events_transitions" -> eventsTransitionsSql,
-    "events_trigrams" -> eventsTrigramsSql,
-    "events_scd" -> eventsScdSql,
-    "events_sliding" -> eventsSlidingSql,
-    "events_value_stats" -> eventsValueStatsSql,
-    "events_rolling" -> eventsRollingSql,
-    "events_anomaly" -> eventsAnomalySql,
-    "events_seasonality" -> eventsSeasonalitySql,
-    "events_forecast" -> eventsForecastSql,
-    "events_value_quantiles" -> eventsValueQuantilesSql,
-    "events_hourly" -> eventsHourlySql,
-    "events_interarrival" -> eventsInterarrivalSql,
-    "events_debounce" -> eventsDebounceSql,
-    "q1_agg" -> q1AggSql,
-    "q3_shipping" -> q3ShippingSql,
-    "q5_local_supplier" -> q5LocalSupplierSql,
-    "q18_large_orders" -> q18LargeOrdersSql,
-    "q4_priority" -> q4PrioritySql,
-    "q6_forecast" -> q6ForecastSql,
-    "q10_returns" -> q10ReturnsSql,
-    "q14_promo" -> q14PromoSql
-  ) ++ OpsQueries.oracles
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("kg_mentions", kgMentions, kgMentionsSql),
+    QueryDef("kg_doc_density", kgDocDensity, kgDocDensitySql),
+    QueryDef("kg_entities", kgEntities, kgEntitiesSql),
+    QueryDef("kg_triples", kgTriples, kgTriplesSql),
+    QueryDef("kg_edges", kgEdges, kgEdgesSql),
+    QueryDef("kg_aggregate", kgAggregate, kgAggregateSql),
+    QueryDef("kg_diff", kgDiff, kgDiffSql),
+    QueryDef("kg_churn", kgChurn, kgChurnSql),
+    QueryDef("kg_degree", kgDegree, kgDegreeSql),
+    QueryDef("kg_pred_counts", kgPredCounts, kgPredCountsSql),
+    QueryDef("kg_top_entities", kgTopEntities, kgTopEntitiesSql),
+    QueryDef("kg_stats", kgStats, kgStatsSql),
+    QueryDef("kg_top_relations", kgTopRelations, kgTopRelationsSql),
+    QueryDef("kg_nx_edges", kgNxEdges, kgNxEdgesSql),
+    QueryDef("kg_2hop", kg2Hop, kg2HopSql),
+    QueryDef("kg_substring", kgSubstring, kgSubstringSql),
+    QueryDef("kg_embed", kgEmbed, kgEmbedSql),
+    QueryDef("kg_embed_rel", kgEmbedRel, kgEmbedRelSql),
+    QueryDef("kg_viz", kgViz, kgVizSql),
+    QueryDef("kg_retrieve", kgRetrieve, kgRetrieveSql),
+    QueryDef("kg_retrieve_context", kgRetrieveContext, kgRetrieveContextSql),
+    QueryDef("kg_normalize", kgNormalize, kgNormalizeSql),
+    QueryDef("kg_cluster_assign", kgClusterAssign, kgClusterAssignSql),
+    QueryDef("kg_cluster_map", kgClusterMap, kgClusterMapSql),
+    QueryDef("kg_cluster_rewrite", kgClusterRewrite, kgClusterRewriteSql),
+    QueryDef("kg_components", kgComponents, kgComponentsSql),
+    QueryDef("kg_component_stats", kgComponentStats, kgComponentStatsSql),
+    QueryDef("kg_cc_incremental", kgCcIncremental, kgCcIncrementalSql),
+    QueryDef("kg_pagerank", kgPageRank, kgPageRankSql),
+    QueryDef("kg_hits", kgHits, kgHitsSql),
+    QueryDef("kg_cooc", kgCooc, kgCoocSql),
+    QueryDef("kg_schema_stats", kgSchemaStats, kgSchemaStatsSql),
+    QueryDef("kg_conflicts", kgConflicts, kgConflictsSql),
+    QueryDef("kg_rule_support", kgRuleSupport, kgRuleSupportSql),
+    QueryDef("kg_same_as", kgSameAs, kgSameAsSql),
+    QueryDef("kg_entity_types", kgEntityTypes, kgEntityTypesSql),
+    QueryDef("kg_corroboration", kgCorroboration, kgCorroborationSql),
+    QueryDef("kg_provenance", kgProvenance, kgProvenanceSql),
+    QueryDef("kg_triple_history", kgTripleHistory, kgTripleHistorySql),
+    QueryDef("kg_entity_history", kgEntityHistory, kgEntityHistorySql),
+    QueryDef("kg_blocking_recall", kgBlockingRecall, kgBlockingRecallSql),
+    QueryDef("kg_pred_synonyms", kgPredSynonyms, kgPredSynonymsSql),
+    QueryDef("kg_degree_dist", kgDegreeDist, kgDegreeDistSql),
+    QueryDef("kg_reciprocity", kgReciprocity, kgReciprocitySql),
+    QueryDef("kg_ppr", kgPpr, kgPprSql),
+    QueryDef("kg_link_predict", kgLinkPredict, kgLinkPredictSql),
+    QueryDef("kg_triangles", kgTriangles, kgTrianglesSql),
+    QueryDef("kg_edge_support", kgEdgeSupport, kgEdgeSupportSql),
+    QueryDef("kg_katz", kgKatz, kgKatzSql),
+    QueryDef("kg_lp_holdout", kgLpHoldout, kgLpHoldoutSql),
+    QueryDef("kg_resource_alloc", kgResourceAlloc, kgResourceAllocSql),
+    QueryDef("kg_richclub", kgRichClub, kgRichClubSql),
+    QueryDef("kg_clustering", kgClustering, kgClusteringSql),
+    QueryDef("kg_transitivity", kgTransitivity, kgTransitivitySql),
+    QueryDef("kg_transitive", kgTransitive, kgTransitiveSql),
+    QueryDef("kg_degree_mixing", kgDegreeMixing, kgDegreeMixingSql),
+    QueryDef("kg_motifs", kgMotifs, kgMotifsSql),
+    QueryDef("kg_kcore", kgKcore, kgKcoreSql),
+    QueryDef("kg_harmonic", kgHarmonic, kgHarmonicSql),
+    QueryDef("kg_reach_curve", kgReachCurve, kgReachCurveSql),
+    QueryDef("kg_betweenness", kgBetweenness, kgBetweennessSql),
+    QueryDef("kg_ecc", kgEcc, kgEccSql),
+    QueryDef("kg_sssp", kgSssp, kgSsspSql),
+    QueryDef("kg_walks", kgWalks, kgWalksSql),
+    QueryDef("kg_walk_cooc", kgWalkCooc, kgWalkCoocSql),
+    QueryDef("kg_ppmi", kgPpmi, kgPpmiSql),
+    QueryDef("kg_bgp", kgBgp, kgBgpSql),
+    QueryDef("kg_negatives", kgNegatives, kgNegativesSql),
+    QueryDef("kg_communities", kgCommunities, kgCommunitiesSql),
+    QueryDef("kg_comm_stats", kgCommStats, kgCommStatsSql),
+    QueryDef("kg_condense", kgCondense, kgCondenseSql),
+    QueryDef("kg_bowtie", kgBowtie, kgBowtieSql),
+    QueryDef("kg_modularity", kgModularity, kgModularitySql),
+    QueryDef("kg_predicate_gini", kgPredicateGini, kgPredicateGiniSql),
+    QueryDef("events_sessions", eventsSessions, eventsSessionsSql),
+    QueryDef("events_funnel", eventsFunnel, eventsFunnelSql),
+    QueryDef("events_cohorts", eventsCohorts, eventsCohortsSql),
+    QueryDef("events_retention_curve", eventsRetentionCurve, eventsRetentionCurveSql),
+    QueryDef("events_lifecycle", eventsLifecycle, eventsLifecycleSql),
+    QueryDef("events_rfm", eventsRfm, eventsRfmSql),
+    QueryDef("events_streaks", eventsStreaks, eventsStreaksSql),
+    QueryDef("events_dau_wau", eventsDauWau, eventsDauWauSql),
+    QueryDef("events_uniques_sketch", eventsUniquesSketch, eventsUniquesSketchSql),
+    QueryDef("events_attribution", eventsAttribution, eventsAttributionSql),
+    QueryDef("events_activity", eventsActivity, eventsActivitySql),
+    QueryDef("events_asof", eventsAsof, eventsAsofSql),
+    QueryDef("events_range_join", eventsRangeJoin, eventsRangeJoinSql),
+    QueryDef("events_latency_hist", eventsLatencyHist, eventsLatencyHistSql),
+    QueryDef("conv_flatten", convFlatten, convFlattenSql),
+    QueryDef("conv_stats", convStats, convStatsSql),
+    QueryDef("conv_pack", convPack, convPackSql),
+    QueryDef("events_window", eventsWindow, eventsWindowSql),
+    QueryDef("events_user_stats", eventsUserStats, eventsUserStatsSql),
+    QueryDef("events_props", eventsProps, eventsPropsSql),
+    QueryDef("events_transitions", eventsTransitions, eventsTransitionsSql),
+    QueryDef("events_trigrams", eventsTrigrams, eventsTrigramsSql),
+    QueryDef("events_scd", eventsScd, eventsScdSql),
+    QueryDef("events_sliding", eventsSliding, eventsSlidingSql),
+    QueryDef("events_value_stats", eventsValueStats, eventsValueStatsSql),
+    QueryDef("events_rolling", eventsRolling, eventsRollingSql),
+    QueryDef("events_anomaly", eventsAnomaly, eventsAnomalySql),
+    QueryDef("events_seasonality", eventsSeasonality, eventsSeasonalitySql),
+    QueryDef("events_forecast", eventsForecast, eventsForecastSql),
+    QueryDef("events_value_quantiles", eventsValueQuantiles, eventsValueQuantilesSql),
+    QueryDef("events_hourly", eventsHourly, eventsHourlySql),
+    QueryDef("events_interarrival", eventsInterarrival, eventsInterarrivalSql),
+    QueryDef("events_debounce", eventsDebounce, eventsDebounceSql),
+    QueryDef("q1_agg", q1Agg, q1AggSql),
+    QueryDef("q3_shipping", q3Shipping, q3ShippingSql),
+    QueryDef("q5_local_supplier", q5LocalSupplier, q5LocalSupplierSql),
+    QueryDef("q18_large_orders", q18LargeOrders, q18LargeOrdersSql),
+    QueryDef("q4_priority", q4Priority, q4PrioritySql),
+    QueryDef("q6_forecast", q6Forecast, q6ForecastSql),
+    QueryDef("q10_returns", q10Returns, q10ReturnsSql),
+    QueryDef("q14_promo", q14Promo, q14PromoSql)
+  )
 }

@@ -44,13 +44,17 @@ object Conversations {
 
   /** Context-window packing of a conversation's kept turns — the
     * concat-and-cut rule ([[graft.ops.Sampling.seqPack]]'s doctrine
-    * applied to dialogue): turns are laid out in seq order and cut into
-    * windows of at most `capChars` rendered characters (a turn whose
-    * cumulative start crosses a cap boundary opens the next window; a
-    * single turn longer than the cap occupies its own window — turns
-    * are never split, the SFT convention). Output one row per packed
-    * window: (conversation_id, win, n_turns, n_chars, first_seq,
-    * last_seq) — the packing manifest an SFT batcher materializes
+    * applied to dialogue), bucketed by cumulative offset: turns are laid
+    * out in seq order, and each turn goes to window
+    * `win = cum_before div capChars`, where `cum_before` is the rendered
+    * length of the kept turns before it. A window is thus the
+    * `capChars`-wide slot its turns START in, not a bound on their
+    * length: its last turn can run past the cap (n_chars > capChars), a
+    * short turn shares the window of a long turn that follows it when
+    * both start in the same slot, and window ids skip the slots a long
+    * turn spans. Turns are never split, the SFT convention. Output one
+    * row per packed window: (conversation_id, win, n_turns, n_chars,
+    * first_seq, last_seq) — the packing manifest an SFT batcher materializes
     * before tokenization, and n_chars/cap is the padding-waste signal.
     *
     * Shuffle shape: ONE exchange — the per-conversation running-sum

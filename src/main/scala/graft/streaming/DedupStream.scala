@@ -23,16 +23,14 @@ import graft.ops.Dedup
 object DedupStream {
 
   /** Start the verdict stream: each micro-batch's
-    * (doc_id, dup_of, keep) frame is handed to `onBatch`.
+    * (doc_id, dup_of, keep) frame, deduplicated against the committed
+    * `base` state, is handed to `onBatch`.
     */
   def keepVerdicts(
       delta: DataFrame,
-      baseIndex: DataFrame,
-      baseToks: DataFrame,
+      base: Dedup.DedupState,
       onBatch: (DataFrame, Long) => Unit,
       thetaPct: Int = 90,
-      seeds: Int = 16,
-      bands: Int = 8,
       maxBucket: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
@@ -40,11 +38,7 @@ object DedupStream {
       .outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        onBatch(
-          Dedup.incrementalKeepIndexed(
-            baseIndex, baseToks, batch, thetaPct, seeds, bands, maxBucket),
-          id
-        )
+        onBatch(Dedup.incrementalKeep(base, batch, thetaPct, maxBucket), id)
       }
       .start()
 
@@ -55,8 +49,8 @@ object DedupStream {
   // flatMapGroupsWithState state holding the first `maxBucket` admitted
   // docs per band (the batch path's hot-bucket skew guard, reused as
   // the state bound). Rows inside a micro-batch group are processed in
-  // doc_id order, so near-dup siblings arriving together always blame
-  // the smaller id — the batch family's min-blame convention. For an
+  // numeric doc_id order, so near-dup siblings arriving together always
+  // blame the smaller id — the batch family's min-blame convention. For an
   // unbounded crawl, compose with an event-time TTL the way
   // newTriplesExpiring bounds the triple distinct; cross-horizon
   // re-admission then relies on the downstream store's idempotent
@@ -66,25 +60,24 @@ object DedupStream {
   /** One banded sighting of a document: its band key plus the
     * sorted-distinct token set the verifier needs.
     */
-  final case class BandedDoc(doc_id: String, bandKey: String, toks: Seq[String])
+  final case class BandedDoc(doc_id: Long, bandKey: String, toks: Seq[String])
 
   /** Stage-2 output: this document, in this band, is a verified
     * near-duplicate of `dup_of` (None = no match in this band).
     */
-  final case class BandVerdict(doc_id: String, bandKey: String, dup_of: Option[String])
+  final case class BandVerdict(doc_id: Long, bandKey: String, dup_of: Option[Long])
 
   /** Row-local banded projection (doc_id, bandKey, toks) — works on a
     * batch OR streaming frame (no shuffle, no state). Band keys and
-    * signatures are byte-identical to [[Dedup.bandIndex]].
+    * signatures are byte-identical to `Dedup.state(docs).banded`.
     */
-  def bandedDocs(docs: DataFrame, seeds: Int = 16, bands: Int = 8): Dataset[BandedDoc] = {
+  def bandedDocs(docs: DataFrame): Dataset[BandedDoc] = {
     import docs.sparkSession.implicits._
-    // doc_id normalized to string so the typed state shape is id-type
-    // agnostic (documents.parquet keys are longs; verdicts come back
-    // stringly — callers cast at the sink)
+    // documents.parquet keys are longs; ids stay numeric so in-batch
+    // order and blame follow the batch family's numeric min-id rule
     Dedup
-      .bandedWithToks(docs, seeds, bands)
-      .withColumn("doc_id", col("doc_id").cast("string"))
+      .bandedWithToks(docs)
+      .withColumn("doc_id", col("doc_id").cast("long"))
       .as[BandedDoc]
   }
 
@@ -99,10 +92,10 @@ object DedupStream {
     import banded.sparkSession.implicits._
     banded
       .groupByKey(_.bandKey)
-      .flatMapGroupsWithState[List[(String, Seq[String])], BandVerdict](
+      .flatMapGroupsWithState[List[(Long, Seq[String])], BandVerdict](
         OutputMode.Append(),
         GroupStateTimeout.NoTimeout()
-      ) { case (band, rows, state: GroupState[List[(String, Seq[String])]]) =>
+      ) { case (band, rows, state: GroupState[List[(Long, Seq[String])]]) =>
         var kept = if (state.exists) state.get else Nil
         val out = List.newBuilder[BandVerdict]
         // doc_id order + per-doc dedup: deterministic within-batch
@@ -110,14 +103,14 @@ object DedupStream {
         val docs = rows.toSeq.groupBy(_.doc_id).toSeq.sortBy(_._1).map(_._2.head)
         docs.foreach { d =>
           val ds = d.toks.toSet
-          var dup: Option[String] = None
+          var dup: Option[Long] = None
           kept.foreach { case (id, toks) =>
             if (dup.forall(_ > id)) {
               val bs = toks.toSet
               val inter = (ds & bs).size
               val uni = ds.size + bs.size - inter
               // the batch family's integer verification rule
-              if (100 * inter >= thetaPct * uni) dup = Some(dup.fold(id)(math.Ordering.String.min(_, id)))
+              if (100 * inter >= thetaPct * uni) dup = Some(dup.fold(id)(math.min(_, id)))
             }
           }
           out += BandVerdict(d.doc_id, band, dup)

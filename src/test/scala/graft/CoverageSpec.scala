@@ -31,5 +31,7 @@ class CoverageSpec extends AnyFunSuite {
     val o = SparkEntry.oracleSql.keySet
     assert((q -- o).isEmpty, s"queries without oracle: ${q -- o}")
     assert((o -- q).isEmpty, s"oracles without query: ${o -- q}")
+    // a duplicate name in the registry list would collapse in the map
+    assert(SparkEntry.queries.size == SparkEntry.registry.size && SparkEntry.registry.size == 212)
   }
 }

@@ -29,32 +29,44 @@ class TopKRowsSpec extends AnyFunSuite with GenSampling with SparkTestBase {
       )
     }
 
+  /** (q, n, rank) rows of the window form and of the heap, top k by
+    * (score_milli desc, n asc) per q.
+    */
+  private def assertWindowParity(df: org.apache.spark.sql.DataFrame, k: Int): Unit = {
+    val w = Window.partitionBy("q").orderBy(desc("score_milli"), asc("n"))
+    val expected = df
+      .withColumn("rnk", row_number().over(w))
+      .where(col("rnk") <= k)
+      .select(col("q"), col("n"), col("rnk").cast("long"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSet
+    val actual = df
+      .groupBy("q")
+      .agg(GraftFunctions.topKRows(struct(col("score_milli"), col("n")), k, Seq(true, false)).as("top"))
+      .select(col("q"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("q"), col("t.n"), (col("pos") + 1).cast("long"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSet
+    assert(actual == expected)
+  }
+
   test("heap top-k equals window row_number top-k, including ties, across partitions") {
     forAllSamples(rowsGen, n = 15) { raw =>
       // dedup (q, n): the window order (score desc, n asc) is only a
       // total order when n is unique per q — same contract as the ANN
       // scorers
       val rows = raw.groupBy(t => (t._1, t._2)).map(_._2.head).toSeq
-      val df = rows.toDF("q", "n", "score_milli").repartition(7)
-      val w = Window.partitionBy("q").orderBy(desc("score_milli"), asc("n"))
-      val k = 4
-      val expected = df
-        .withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= k)
-        .select(col("q"), col("n"), col("score_milli"), col("rnk").cast("long").as("rnk"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      val actual = df
-        .groupBy("q")
-        .agg(GraftFunctions.topKRows(struct(col("score_milli"), col("n")), k, Seq(true, false)).as("top"))
-        .select(col("q"), posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col("q"), col("t.n"), col("t.score_milli"), (col("pos") + 1).cast("long"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      assert(actual == expected)
+      assertWindowParity(rows.toDF("q", "n", "score_milli").repartition(7), k = 4)
     }
+    // double key: -0.0 and 0.0 tie at the cut (SQL orders them equal, so
+    // n asc decides), and NaN sorts above every number
+    val floating = Seq(
+      (1L, 1L, 5.0), (1L, 2L, 3.0), (1L, 3L, 1.0), (1L, 4L, -0.0), (1L, 5L, 0.0), (1L, 6L, -1.0),
+      (2L, 7L, Double.NaN), (2L, 8L, -0.0), (2L, 9L, 0.0), (2L, 10L, 2.0), (2L, 11L, 1.0)
+    )
+    assertWindowParity(floating.toDF("q", "n", "score_milli").repartition(7), k = 4)
   }
 
   test("k larger than the group keeps the whole group in order") {

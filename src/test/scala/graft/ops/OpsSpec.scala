@@ -21,7 +21,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
   test("minhash LSH: verified pairs only, and dedup-flag recall is high") {
     // every emitted pair must genuinely clear the jaccard threshold
     // (the verification step admits no false positives)
-    val lsh = Dedup.minhashLshPairs(docs, thetaPct = 90)
+    val lsh = Dedup.minhashLshPairs(Dedup.state(docs), thetaPct = 90)
       .select("a", "b").as[(Long, Long)].collect().toSet
     val truth = Dedup
       .ngramJaccardPairs(docs.withColumn("source", lit("all")), thetaPct = 90)
@@ -245,12 +245,12 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("lshRecall: counts replay exactly from the two pair finders") {
-    val row = Dedup.lshRecall(docs, thetaPct = 90).collect()(0)
+    val row = Dedup.lshRecall(Dedup.state(docs), docs, thetaPct = 90).collect()(0)
     val got = (row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3))
     val exact = Dedup.ngramJaccardPairs(docs, thetaPct = 90)
       .select("a", "b").as[(Long, Long)].collect().toSet
     val srcOf = docs.select("doc_id", "source").as[(Long, String)].collect().toMap
-    val lshSame = Dedup.minhashLshPairs(docs, thetaPct = 90)
+    val lshSame = Dedup.minhashLshPairs(Dedup.state(docs), thetaPct = 90)
       .select("a", "b").as[(Long, Long)].collect().toSet
       .filter(p => srcOf(p._1) == srcOf(p._2))
     val both = exact & lshSame
@@ -384,7 +384,8 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     // independent driver-side union-find over the emitted pair list —
     // verifies the CC composition (transitive chains collapse, group id
     // = min member) without re-deriving the pair rule
-    val pairs = Dedup.minhashLshPairs(docs, thetaPct = 90)
+    val st = Dedup.state(docs)
+    val pairs = Dedup.minhashLshPairs(st, thetaPct = 90)
       .select("a", "b").as[(Long, Long)].collect()
     assert(pairs.nonEmpty, "fixture must contain near-duplicates")
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -406,13 +407,13 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       .toMap
     // force the DISTRIBUTED CC path (threshold 0) — the default adaptive
     // path collapses to the same union-find this test re-derives
-    val got = Dedup.minhashGroups(docs, thetaPct = 90, driverPairThreshold = 0)
+    val got = Dedup.minhashGroups(st, thetaPct = 90, driverPairThreshold = 0)
       .as[(Long, Long)].collect().toMap
     assert(got == expected, s"diff: ${(got.toSet diff expected.toSet).take(5)}")
     // transitivity: every doc's group is the min doc_id of its cluster
     got.groupBy(_._2).foreach { case (g, ms) => assert(ms.keys.min == g) }
     // and the adaptive driver path agrees with the distributed one
-    val adaptive = Dedup.minhashGroups(docs, thetaPct = 90)
+    val adaptive = Dedup.minhashGroups(st, thetaPct = 90)
       .as[(Long, Long)].collect().toMap
     assert(adaptive == got)
   }
@@ -816,10 +817,11 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("nearDupKeep: verdict list matches the group assignment") {
-    val groups = Dedup.minhashGroups(docs).collect()
+    val st = Dedup.state(docs)
+    val groups = Dedup.minhashGroups(st).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ids = docs.select("doc_id").as[Long].collect().toSet
-    val got = Dedup.nearDupKeep(docs).collect()
+    val got = Dedup.nearDupKeep(st).collect()
       .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]), r.getLong(2)))
       .toSet
     val expected = ids.map { id =>
@@ -1094,14 +1096,19 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
   test("incremental dedup: indexed path over committed artifacts equals the derive-from-base path") {
     val base = docs.where(col("doc_id") % 4 =!= 3)
     val delta = docs.where(col("doc_id") % 4 === 3)
-    val direct = Dedup.incrementalKeep(base, delta).collect()
+    val st = Dedup.state(base)
+    val direct = Dedup.incrementalKeep(st, delta).collect()
       .map(r => (r.getLong(0), Option(r.get(1)), r.getLong(2))).toSet
-    val indexed = Dedup.incrementalKeepIndexed(
-      Dedup.bandIndex(base),
-      base.select(col("doc_id"), array_sort(array_distinct(split(col("text"), " "))).as("toks"))
-        .select(col("doc_id"), filter(col("toks"), t => t =!= lit("")).as("toks")),
-      delta
-    ).collect().map(r => (r.getLong(0), Option(r.get(1)), r.getLong(2))).toSet
+    // the state as a pipeline checkpoints it: both frames committed to
+    // and read back off the snapshot store
+    val table = new graft.store.SnapshotTable(
+      spark, java.nio.file.Files.createTempDirectory("graft-dedup-state").toString)
+    table.commit(st.toks, "dedup_token_sets", "v1")
+    table.commit(st.banded, "dedup_band_index", "v1")
+    val committed = Dedup.DedupState(
+      table.read("dedup_token_sets", "v1"), table.read("dedup_band_index", "v1"))
+    val indexed = Dedup.incrementalKeep(committed, delta).collect()
+      .map(r => (r.getLong(0), Option(r.get(1)), r.getLong(2))).toSet
     assert(direct == indexed)
     assert(direct.nonEmpty)
   }
@@ -1116,7 +1123,8 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       (3L, "dddd eeee ffff")
     ).toDF("doc_id", "text")
     val spectrum = Dedup
-      .bandIndex(d)
+      .state(d)
+      .banded
       .groupBy("bandKey")
       .agg(count(lit(1)).as("bucket_docs"))
       .groupBy("bucket_docs")
@@ -1137,7 +1145,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       (2L, body, "s1", 80L),
       (3L, other, "s2", 50L)
     ).toDF("doc_id", "text", "source", "n_chars")
-    val keep = Dedup.nearDupKeep(d, thetaPct = 90).select("doc_id", "keep")
+    val keep = Dedup.nearDupKeep(Dedup.state(d), thetaPct = 90).select("doc_id", "keep")
     val got = d
       .select(col("doc_id"), col("source"), col("n_chars"))
       .join(keep, "doc_id")
@@ -1167,7 +1175,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
     val delta = Seq((3L, t1), (7L, "zebra quark mamba lantern onyx"))
       .toDF("doc_id", "text")
-    val got = Dedup.incrementalKeep(base, delta).collect()
+    val got = Dedup.incrementalKeep(Dedup.state(base), delta).collect()
       .map(r => (r.getLong(0), Option(r.get(1)), r.getLong(2))).toSet
     assert(got == Set((3L, Some(1L), 0L), (7L, None, 1L)))
   }
@@ -1178,9 +1186,9 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     val txt = (1 to 30).map(i => s"w$i").mkString(" ")
     val base = (1L to 50L).map(i => (i, txt)).toDF("doc_id", "text")
     val delta = Seq((100L, txt)).toDF("doc_id", "text")
-    val capped = Dedup.incrementalKeep(base, delta, maxBucket = Some(10)).collect()
+    val capped = Dedup.incrementalKeep(Dedup.state(base), delta, maxBucket = Some(10)).collect()
     assert(capped.map(r => (r.getLong(0), r.getLong(2))).toSet == Set((100L, 1L)))
-    val uncapped = Dedup.incrementalKeep(base, delta).collect()
+    val uncapped = Dedup.incrementalKeep(Dedup.state(base), delta).collect()
     assert(uncapped.map(r => (r.getLong(0), r.getLong(2))).toSet == Set((100L, 0L)))
     assert(uncapped.head.getLong(1) == 1L) // min base partner
   }
@@ -1191,7 +1199,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       (0L, txt), (1L, txt), // exact near-dup pair → cluster of 2
       (2L, "zebra quark mamba lantern onyx")
     ).toDF("doc_id", "text").withColumn("source", lit("s"))
-    val got = Dedup.softWeights(d).collect()
+    val got = Dedup.softWeights(Dedup.state(d)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((0L, 2L, 500L), (1L, 2L, 500L), (2L, 1L, 1000L)))
   }
@@ -1204,7 +1212,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       (3L, txt2), (4L, txt2), // cluster of 2
       (5L, "zebra quark mamba lantern onyx") // singleton
     ).toDF("doc_id", "text").withColumn("source", lit("s"))
-    val got = Dedup.clusterSizeProfile(d).collect()
+    val got = Dedup.clusterSizeProfile(Dedup.state(d)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((3L, 3L, 1L), (2L, 2L, 1L), (1L, 1L, 1L)))
   }
@@ -1383,7 +1391,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       (2L, dup, "s"), // exact near-dup of doc 1 → dropped
       (3L, (13 to 24).map(i => s"zz$i").mkString(" "), "t")
     ).toDF("doc_id", "text", "source")
-    val got = Dedup.sourceDupProfile(d, thetaPct = 90).collect()
+    val got = Dedup.sourceDupProfile(Dedup.state(d), d, thetaPct = 90).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == Set(("s", 2L, 1L, 500L), ("t", 1L, 0L, 0L)))
   }

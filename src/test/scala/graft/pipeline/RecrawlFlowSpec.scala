@@ -13,7 +13,7 @@ import graft.store.SnapshotTable
   * token sets, read back off the snapshot store — no base rescan), only
   * the kept documents extend the corpus, and the new canonical triple
   * set diffs against the committed v1 graph as (added, removed) rows.
-  * Composes Dedup.incrementalKeepIndexed + SnapshotTable + GraphDiff —
+  * Composes Dedup.incrementalKeep + SnapshotTable + GraphDiff —
   * each individually specced; this asserts the composed flow end to end.
   */
 class RecrawlFlowSpec extends AnyFunSuite with SparkTestBase {
@@ -27,13 +27,13 @@ class RecrawlFlowSpec extends AnyFunSuite with SparkTestBase {
 
     // ingest v1: canonical triples + the two dedup-state artifacts
     val v1 = table.commit(TokenRules.triples(base), "canonical_triples", "v1")
-    table.commit(Dedup.bandIndex(base), "dedup_band_index", "v1")
-    table.commit(Dedup.tokenSetTable(base), "dedup_token_sets", "v1")
+    val st = Dedup.state(base)
+    table.commit(st.banded, "dedup_band_index", "v1")
+    table.commit(st.toks, "dedup_token_sets", "v1")
 
     // recrawl: dedup the delta against the COMMITTED artifacts only
-    val verdicts = Dedup.incrementalKeepIndexed(
-      table.read("dedup_band_index", "v1"),
-      table.read("dedup_token_sets", "v1"),
+    val verdicts = Dedup.incrementalKeep(
+      Dedup.DedupState(table.read("dedup_token_sets", "v1"), table.read("dedup_band_index", "v1")),
       delta
     )
     val keptIds = verdicts.where(col("keep") === 1L).select("doc_id")

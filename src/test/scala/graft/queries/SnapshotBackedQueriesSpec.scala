@@ -17,7 +17,7 @@ class SnapshotBackedQueriesSpec extends AnyFunSuite with SparkTestBase {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def rowsOf(name: String): Seq[String] = {
-    val df = Queries.all(name)(spark, sfDir)
+    val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.collect().map(_.toString).sorted.toSeq
   }
 

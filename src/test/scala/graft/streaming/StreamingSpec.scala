@@ -603,8 +603,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.functions.col
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val base = d.where(col("doc_id") % 4 =!= 3)
-    val baseIndex = graft.ops.Dedup.bandIndex(base)
-    val baseToks = graft.ops.Dedup.tokenSetTable(base)
+    val baseState = graft.ops.Dedup.state(base)
     val delta = d.where(col("doc_id") % 4 === 3)
       .select("doc_id", "text")
       .collect()
@@ -614,8 +613,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val ms = MemoryStream[(Long, String)]
     val q = graft.streaming.DedupStream.keepVerdicts(
       ms.toDS().toDF("doc_id", "text"),
-      baseIndex,
-      baseToks,
+      baseState,
       (batch, _) =>
         got.synchronized {
           got ++= batch.collect().map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]), r.getLong(2)))
@@ -631,7 +629,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       ms.addData(delta.drop(60): _*)
       q.processAllAvailable()
       val batchExpected = graft.ops.Dedup
-        .incrementalKeep(base, d.where(col("doc_id") % 4 === 3))
+        .incrementalKeep(baseState, d.where(col("doc_id") % 4 === 3))
         .collect()
         .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]), r.getLong(2)))
         .toSet
