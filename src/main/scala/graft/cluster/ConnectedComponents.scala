@@ -17,9 +17,15 @@ import org.apache.spark.sql.functions._
   *     cache substitution keeps the iterated plan shallow (no lineage
   *     blowup) without retaining every round's blocks;
   *   - convergence detected by an aggregate checksum whose action ALSO
-  *     materializes the round's cache — one job per iteration total —
-  *     with an O(diameter) iteration bound; surface-variant clusters
-  *     have single-digit diameters, so the loop is short in practice.
+  *     materializes the round's checkpoint — one action per round, plus
+  *     one for the seed labels — with an O(diameter) iteration bound;
+  *     surface-variant clusters have single-digit diameters, so the loop
+  *     is short in practice. An action is one job only without AQE:
+  *     under AQE (on in every session this library builds) each shuffle
+  *     exchange and broadcast of the action's plan runs as its own job
+  *     before the result job, so a 2-round run over a 24-node,
+  *     one-component graph runs 13 jobs, and a run over an empty edge
+  *     set still runs several.
   */
 object ConnectedComponents {
 
@@ -162,8 +168,14 @@ object ConnectedComponents {
     *   - delta endpoints map through the assignment with two hash joins
     *     (the only contact with base state, a bucketed snapshot lookup
     *     at 100 TB — base EDGES are never read);
-    *   - the CC fixpoint runs on the contracted graph, whose size is
+    *   - the contracted edges are materialized once; when none are
+    *     left (every delta edge fell inside one existing component, the
+    *     common recrawl case) the fixpoint is skipped altogether,
+    *     otherwise it runs on the contracted graph, whose size is
     *     bounded by the delta edge count, not the corpus;
+    *   - delta endpoints the base has never seen are flagged during the
+    *     contraction, so a node whose only edges are self-loops is kept
+    *     and the delta-only rows are picked without another base join;
     *   - untouched assignments pass through a single left join against
     *     the relabel map (small by the same bound — AQE broadcasts it).
     *
@@ -183,35 +195,49 @@ object ConnectedComponents {
     val bySrc = baseAssign.select(col("node").as("src"), col("component").as("srcLabel"))
     val byDst = baseAssign.select(col("node").as("dst"), col("component").as("dstLabel"))
     // contract: an endpoint known to the base becomes its component
-    // label; an unseen endpoint stays itself. Edges falling inside one
-    // existing component become self-loops and are dropped before the
-    // fixpoint ever sees them.
-    val contracted = deltaEdges
-      .select(col("src"), col("dst"))
-      .join(bySrc, Seq("src"), "left")
-      .join(byDst, Seq("dst"), "left")
-      .select(
-        coalesce(col("srcLabel"), col("src")).as("src"),
-        coalesce(col("dstLabel"), col("dst")).as("dst")
-      )
-      .where(col("src") =!= col("dst"))
+    // label; an unseen endpoint stays itself and is flagged new. Edges
+    // falling inside one existing component become self-loops; they stay
+    // in this frame only to carry their new endpoints (a delta-only node
+    // whose only edges are self-loops is still a node — a from-scratch
+    // run keeps it) and never reach the fixpoint. Materialized once: the
+    // emptiness check, the fixpoint and the new-node set all read it. A
+    // contracted value's flag is a function of the value (base labels
+    // are base nodes), so the distinct is per (src, dst).
+    val mapped = graft.util.Materialize.stage(
+      deltaEdges
+        .select(col("src"), col("dst"))
+        .join(bySrc, Seq("src"), "left")
+        .join(byDst, Seq("dst"), "left")
+        .select(
+          coalesce(col("srcLabel"), col("src")).as("src"),
+          coalesce(col("dstLabel"), col("dst")).as("dst"),
+          col("srcLabel").isNull.as("srcNew"),
+          col("dstLabel").isNull.as("dstNew")
+        )
+        .distinct()
+    )
+    val contracted = mapped.where(col("src") =!= col("dst")).select("src", "dst")
+    val deltaOnly = mapped
+      .where(col("srcNew")).select(col("src").as("node"))
+      .union(mapped.where(col("dstNew")).select(col("dst").as("node")))
       .distinct()
-    val touched = contracted
-      .select(col("src").as("node"))
-      .union(contracted.select(col("dst").as("node")))
-      .distinct()
-    // (old label | delta-only node) -> new component label
-    val relabel = run(contracted, touched, maxIterations)
-    val relabelMap = relabel.select(col("node").as("old"), col("component").as("newc"))
-    val updatedBase = baseAssign
-      .join(relabelMap, col("component") === col("old"), "left")
-      .select(col("node"), coalesce(col("newc"), col("component")).as("component"))
-    // contracted nodes that are NOT base nodes are delta-only entities;
-    // base labels are themselves base nodes, so the anti-join removes
-    // exactly the already-covered rows
-    val deltaOnly = relabel
-      .join(baseAssign.select("node"), Seq("node"), "left_anti")
-      .select(col("node"), col("component"))
-    updatedBase.union(deltaOnly)
+    // every delta edge fell inside one component (the common recrawl
+    // case): no component merges, each delta-only node is its own
+    if (contracted.isEmpty)
+      baseAssign.select("node", "component").union(deltaOnly.withColumn("component", col("node")))
+    else {
+      val touched = contracted
+        .select(col("src").as("node"))
+        .union(contracted.select(col("dst").as("node")))
+        .union(deltaOnly)
+        .distinct()
+      // (old label | delta-only node) -> new component label
+      val relabel = run(contracted, touched, maxIterations)
+      val relabelMap = relabel.select(col("node").as("old"), col("component").as("newc"))
+      val updatedBase = baseAssign
+        .join(relabelMap, col("component") === col("old"), "left")
+        .select(col("node"), coalesce(col("newc"), col("component")).as("component"))
+      updatedBase.union(relabel.join(deltaOnly, Seq("node"), "left_semi"))
+    }
   }
 }

@@ -331,6 +331,18 @@ class ClusterSpec extends AnyFunSuite with SparkTestBase {
     // empty delta: assignment passes through unchanged
     val empty = spark.emptyDataset[(String, String)].toDF("src", "dst")
     assert(asSet(ConnectedComponents.incremental(baseAssign, empty)) == asSet(baseAssign))
+    // a delta-only node whose only delta edge is a self-loop ("Alice met
+    // Alice") is still a node of the merged graph: it must survive the
+    // contraction, both when other delta edges reach the fixpoint and
+    // when every contracted edge is a self-loop (the skipped fixpoint)
+    val ab = Seq(("a", "b"))
+    val abAssign = cc(ab)
+    for (loopDelta <- Seq(Seq(("x", "x"), ("b", "c")), Seq(("x", "x"), ("a", "b")))) {
+      val got = asSet(ConnectedComponents.incremental(abAssign, loopDelta.toDF("src", "dst")))
+      val want = asSet(cc(ab ++ loopDelta))
+      assert(got == want, s"delta $loopDelta: incr-only ${got -- want}; scratch-only ${want -- got}")
+      assert(got.contains(("x", "x")))
+    }
   }
 
   test("lshChannelRecall: engine expressions agree with the driver-side pure functions") {

@@ -23,7 +23,8 @@ class SnapshotBackedQueriesSpec extends AnyFunSuite with SparkTestBase {
 
   test("snapshot-backed kg_* queries are row-identical to derive-from-text") {
     val names =
-      Seq("kg_triples", "kg_entities", "kg_edges", "kg_degree", "kg_stats", "kg_components")
+      Seq("kg_triples", "kg_entities", "kg_edges", "kg_degree", "kg_stats", "kg_components",
+        "kg_cc_incremental")
     val fromText = names.map(n => n -> rowsOf(n)).toMap
 
     val root = Files.createTempDirectory("graft-derived-spec")
@@ -36,6 +37,9 @@ class SnapshotBackedQueriesSpec extends AnyFunSuite with SparkTestBase {
       val fp = Queries.derivedFp(spark, sfDir).get
       assert(t.exists("derived_triples", fp))
       assert(t.exists("derived_entities", fp))
+      // kg_cc_incremental's committed base assignment and delta edges
+      assert(t.exists("derived_cc_base_assign", fp))
+      assert(t.exists("derived_cc_delta_edges", fp))
       val fromSnap = names.map(n => n -> rowsOf(n)).toMap
       names.foreach { n =>
         assert(fromSnap(n) == fromText(n), s"query $n diverged under snapshot-backed mode")
@@ -80,10 +84,14 @@ class SnapshotBackedQueriesSpec extends AnyFunSuite with SparkTestBase {
       Queries.ensureDerived(spark, sfDir)
       val t = new graft.store.SnapshotTable(spark, root.toString)
       val fp = Queries.derivedFp(spark, sfDir).get
-      val before = t.read("derived_triples", fp).inputFiles.toSet
+      val stages = Seq("derived_triples", "derived_cc_base_assign")
+      def files = stages.map(st => st -> t.read(st, fp).inputFiles.toSet).toMap
+      val before = files
       Queries.ensureDerived(spark, sfDir)
-      val after = t.read("derived_triples", fp).inputFiles.toSet
-      assert(before == after, "resume recomputed an already-committed snapshot")
+      val after = files
+      stages.foreach { st =>
+        assert(before(st) == after(st), s"resume recomputed the committed $st snapshot")
+      }
     } finally {
       Queries.derivedRootOverride = None
       deleteRecursively(root.toFile)
