@@ -1,10 +1,12 @@
 package graft.cluster
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.MinhashUtil
+import graft.util.Hex
 
 /** Candidate-pair generation for surface-form clustering — the
   * deterministic, order-independent replacement for the reference's
@@ -58,20 +60,25 @@ object CandidatePairs {
       synonymSets: Seq[Set[String]] = Nil
   )
 
-  private def md5Hex(s: String): String = {
-    val d = MessageDigest.getInstance("MD5").digest(s.getBytes(StandardCharsets.UTF_8))
-    d.map(b => f"$b%02x").mkString
-  }
-
   /** Banded MinHash keys of a normalized surface: `bands` keys, each the
-    * md5 of `rows` per-seed minima over md5-hashed shingles. Pure
-    * function — identical on every executor.
+    * hex md5 of `rows` `|`-joined per-seed minima over md5-hashed UTF-8
+    * shingles. The signature comes from the MinHash kernel `Dedup`'s
+    * `minhash_sig` also runs ([[graft.functions.MinhashUtil]]), and the
+    * bands hash on its reused digest. Pure function — identical on every
+    * executor.
     */
   def bandKeys(norm: String, cfg: ClusterConfig): Seq[String] = {
-    val sh = Normalize.shingles(norm, cfg.shingleK)
+    val sh = Normalize.shingles(norm, cfg.shingleK).map(_.getBytes(StandardCharsets.UTF_8)).toArray
     val rows = math.max(1, cfg.minhashSeeds / cfg.bands)
-    val sig = (0 until cfg.minhashSeeds).map(i => sh.map(t => md5Hex(i + ":" + t)).min)
-    (0 until cfg.bands).map(b => md5Hex(sig.slice(b * rows, (b + 1) * rows).mkString("|")))
+    val sig = MinhashUtil.sigBytes(sh, cfg.minhashSeeds)
+    val md = MinhashUtil.md5
+    (0 until cfg.bands).map { b =>
+      sig.slice(b * rows, (b + 1) * rows).zipWithIndex.foreach { case (h, r) =>
+        if (r > 0) md.update('|'.toByte)
+        md.update(h)
+      }
+      Hex.string(md.digest())
+    }
   }
 
   /** The exact acceptance rule for a candidate pair of (surface, norm). */
@@ -81,15 +88,6 @@ object CandidatePairs {
       Normalize.prefixMatch(aNorm, bNorm, cfg.prefixRatio) ||
       cfg.synonymSets.exists(s => s.contains(aSurf) && s.contains(bSurf))
 
-  /** Driver-side twin of [[edges]] for the adaptive small-dictionary
-    * path: identical channels, blocking keys, orderings, and acceptance
-    * rule, evaluated in plain Scala over an already-collected member set.
-    * The distributed path's per-channel Spark jobs (probe + windows +
-    * minhash flatMap + verify) are pure driver-scheduling latency when
-    * the dictionary is a few thousand surfaces — this removes them
-    * entirely (the jobs, not the semantics: results match [[edges]]
-    * pair-for-pair, which the sbt parity test asserts).
-    */
   /** Spark-parity string semantics for the driver twin: Spark `length`/
     * `substring` count CODE POINTS and its string comparison is UTF-8
     * unsigned-byte order — JVM String.length/take/compareTo are UTF-16
@@ -105,6 +103,15 @@ object CandidatePairs {
     (a: String, b: String) =>
       java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
 
+  /** Driver-side twin of [[edges]] for the adaptive small-dictionary
+    * path: identical channels, blocking keys, orderings, and acceptance
+    * rule, evaluated in plain Scala over an already-collected member set.
+    * The distributed path's per-channel Spark jobs (probe + windows +
+    * minhash flatMap + verify) are pure driver-scheduling latency when
+    * the dictionary is a few thousand surfaces — this removes them
+    * entirely (the jobs, not the semantics: results match [[edges]]
+    * pair-for-pair, which the sbt parity test asserts).
+    */
   def edgesLocal(members: Seq[String], cfg: ClusterConfig = ClusterConfig()): Seq[(String, String)] = {
     val distinctMembers = members.distinct
     val withNorm = distinctMembers.map(m => (m, Normalize(m)))

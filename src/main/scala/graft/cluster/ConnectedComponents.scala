@@ -29,10 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** @param edges columns (src, dst) — undirected semantics
-    * @param nodes one column `node`; isolated nodes keep their own label
-    * @return (node, component) where component = min node label reachable
-    */
   /** Hub-entity skew in the propagation join (all und rows with a hub
     * src land in one sort-merge partition) is handled by AQE's skew-join
     * split — the engine-side equivalent of salting (it splits the skewed
@@ -44,8 +40,10 @@ object ConnectedComponents {
     * driver threads (ClusterGraph runs entity and predicate clustering
     * in parallel) can interleave set/restore and flip the conf mid-run
     * for the sibling, so the mutation is gone (round-2 advice).
-    */
-  /** @param saltFactor explicit salted-key handling for hub-entity skew
+    *
+    * @param edges columns (src, dst) — undirected semantics
+    * @param nodes one column `node`; isolated nodes keep their own label
+    * @param saltFactor explicit salted-key handling for hub-entity skew
     *   in the propagation join (the north-rule mechanism): when > 1, the
     *   bounded `labels` side is replicated `saltFactor`× with a salt
     *   column and each edge row picks the deterministic salt
@@ -57,6 +55,7 @@ object ConnectedComponents {
     *   same skew adaptively without the constant-factor replication
     *   cost, so explicit salt is for clusters where AQE is unavailable
     *   or pinned off.
+    * @return (node, component) where component = min node label reachable
     */
   def run(edges: DataFrame, nodes: DataFrame, maxIterations: Int = 20, saltFactor: Int = 1): DataFrame =
     runInner(edges, nodes, maxIterations, saltFactor)

@@ -1,6 +1,8 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+import java.util.Arrays
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,6 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.util.Hex
 
 /** Single-pass MinHash signature: for each seed `i` in `[0, seeds)`,
   * the minimum of `md5(concat('i:', token))` over the document's token
@@ -31,90 +35,69 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokens are skipped (`array_min`/`list_min` ignore nulls); an empty
   * (or all-null) token array yields a signature of `seeds` nulls
   * (`array_min([])` is null), NOT a null array.
+  *
+  * One kernel for both MinHash stages: `Dedup`'s `minhash_sig` calls
+  * [[sig]] on Catalyst arrays, and the cluster stage's banded blocking
+  * ([[graft.cluster.CandidatePairs.bandKeys]]) calls [[sigBytes]] on
+  * UTF-8 shingle bytes and hashes its bands with the same thread's
+  * [[md5]] — both run the same loop.
   */
 object MinhashUtil {
 
   private val digests: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** "i:" prefix bytes per seed index, grown on demand; seeds counts are
-    * tiny compile-time constants (16 in the dedup state), so the cache
-    * is effectively one array allocated once per JVM.
-    */
-  @volatile private var prefixes: Array[Array[Byte]] = Array.empty
-
-  private def prefixFor(i: Int): Array[Byte] = {
-    var p = prefixes
-    if (i >= p.length) synchronized {
-      p = prefixes
-      if (i >= p.length) {
-        val np = java.util.Arrays.copyOf(p, math.max(i + 1, math.max(16, p.length * 2)))
-        var j = p.length
-        while (j < np.length) {
-          np(j) = (j.toString + ":").getBytes("UTF-8")
-          j += 1
-        }
-        prefixes = np
-        p = np
-      }
-    }
-    p(i)
-  }
-
-  private val HexChars = "0123456789abcdef".toCharArray
-
-  private def hex(b: Array[Byte]): UTF8String = {
-    val out = new Array[Byte](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = HexChars((b(i) >> 4) & 0xf).toByte
-      out(2 * i + 1) = HexChars(b(i) & 0xf).toByte
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
-
-  private def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
-    var i = 0
-    while (i < 16) {
-      val x = a(i) & 0xff
-      val y = b(i) & 0xff
-      if (x != y) return x < y
-      i += 1
-    }
-    false
-  }
-
-  def sig(toks: ArrayData, seeds: Int): ArrayData = {
+  /** The calling thread's reused MD5 digest, reset. */
+  def md5: MessageDigest = {
     val md = digests.get()
+    md.reset()
+    md
+  }
+
+  /** "i:" prefix bytes per seed index; seed counts are small plan
+    * constants (16 in the dedup state and the cluster stage).
+    */
+  private val prefixes = Array.tabulate(64)(i => s"$i:".getBytes(StandardCharsets.US_ASCII))
+
+  private def prefixFor(i: Int): Array[Byte] =
+    if (i < prefixes.length) prefixes(i) else s"$i:".getBytes(StandardCharsets.US_ASCII)
+
+  /** The shared loop: per seed, the hex (ASCII bytes) of the unsigned
+    * minimum of `md5("i:" ++ token)` over the `n` tokens `tok(0 until n)`;
+    * a null token is skipped, a seed no token reached is null.
+    */
+  private def minHex(n: Int, tok: Int => Array[Byte], seeds: Int): Array[Array[Byte]] = {
+    val md = md5
     val mins = new Array[Array[Byte]](seeds)
     val scratch = new Array[Byte](16)
-    val n = toks.numElements()
     var i = 0
     while (i < n) {
-      if (!toks.isNullAt(i)) {
-        val tb = toks.getUTF8String(i).getBytes
+      val tb = tok(i)
+      if (tb != null) {
         var s = 0
         while (s < seeds) {
-          md.reset()
           md.update(prefixFor(s))
           md.update(tb)
           md.digest(scratch, 0, 16)
-          if (mins(s) == null) mins(s) = java.util.Arrays.copyOf(scratch, 16)
-          else if (unsignedLess(scratch, mins(s))) System.arraycopy(scratch, 0, mins(s), 0, 16)
+          if (mins(s) == null) mins(s) = Arrays.copyOf(scratch, 16)
+          else if (Arrays.compareUnsigned(scratch, mins(s)) < 0) System.arraycopy(scratch, 0, mins(s), 0, 16)
           s += 1
         }
       }
       i += 1
     }
-    val out = new Array[Any](seeds)
-    var s = 0
-    while (s < seeds) {
-      out(s) = if (mins(s) == null) null else hex(mins(s))
-      s += 1
-    }
-    new GenericArrayData(out)
+    mins.map(m => if (m == null) null else Hex.bytes(m, 16))
   }
+
+  /** Byte-array entry point: `toks` are UTF-8 token bytes. */
+  def sigBytes(toks: Array[Array[Byte]], seeds: Int): Array[Array[Byte]] =
+    minHex(toks.length, toks(_), seeds)
+
+  def sig(toks: ArrayData, seeds: Int): ArrayData =
+    new GenericArrayData(
+      minHex(toks.numElements(), i => if (toks.isNullAt(i)) null else toks.getUTF8String(i).getBytes, seeds)
+        .map[Any](h => if (h == null) null else UTF8String.fromBytes(h))
+    )
 }
 
 /** `minhash_sig(toks, seeds)` — see [[MinhashUtil]]. `seeds` is a plan

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -32,22 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object WinnowUtil {
 
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
   private val HexChars = "0123456789abcdef".getBytes
-
-  /** Unsigned byte-compare of two hexLen-byte ASCII-hex prefixes. */
-  private def less(a: Array[Byte], b: Array[Byte], n: Int): Boolean = {
-    var i = 0
-    while (i < n) {
-      val x = a(i) & 0xff
-      val y = b(i) & 0xff
-      if (x != y) return x < y
-      i += 1
-    }
-    false
-  }
 
   def fingerprints(text: UTF8String, gramLen: Int, hexLen: Int, window: Int): GenericArrayData = {
     val bytes = text.getBytes
@@ -76,7 +59,7 @@ object WinnowUtil {
     @inline def gramStart(i: Int): Int = if (offs == null) i else offs(i)
     @inline def gramEnd(i: Int): Int = if (offs == null) i + gramLen else offs(i + gramLen)
 
-    val md = digests.get()
+    val md = MinhashUtil.md5
     val scratch = new Array[Byte](16)
     val prefixBytes = (hexLen + 1) / 2
     // ring buffer of hex prefixes for the last `window` grams + a
@@ -105,7 +88,7 @@ object WinnowUtil {
       // `>=` keeps the NEWEST of equal prefixes — same min VALUE either
       // way, and value is all the output keeps.
       while (dHead < dTail && deque(dHead) <= i - window) dHead += 1
-      while (dHead < dTail && !less(ring(deque(dTail - 1) % window), slot, hexLen)) dTail -= 1
+      while (dHead < dTail && java.util.Arrays.compareUnsigned(ring(deque(dTail - 1) % window), slot) >= 0) dTail -= 1
       deque(dTail) = i
       dTail += 1
       if (i >= window - 1) {

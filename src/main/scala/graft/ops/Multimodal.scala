@@ -1,9 +1,10 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+
+import graft.util.Hex
 
 /** Multimodal-column plumbing: treat image/audio/video payloads as opaque
   * `binary` columns with typed metadata, decoded/feature-extracted by a
@@ -41,8 +42,7 @@ object Multimodal {
   object DecodeStub {
     def decodeBatch(rows: Seq[MediaRow]): Seq[MediaMeta] =
       rows.map { r =>
-        val md = MessageDigest.getInstance("MD5")
-        val checksum = md.digest(r.media).map(b => f"$b%02x").mkString
+        val checksum = Hex.string(MessageDigest.getInstance("MD5").digest(r.media))
         MediaMeta(
           doc_id = r.doc_id,
           media_type = r.media_type,

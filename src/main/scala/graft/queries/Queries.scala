@@ -71,9 +71,7 @@ object Queries {
       val digest = java.security.MessageDigest
         .getInstance("MD5")
         .digest(entries.sorted.mkString(",").getBytes("UTF-8"))
-        .map(b => f"$b%02x")
-        .mkString
-      Some(s"$dir|$digest")
+      Some(s"$dir|${graft.util.Hex.string(digest)}")
     } catch { case _: Exception => None }
   }
 

@@ -130,13 +130,8 @@ final class SnapshotTable(spark: SparkSession, root: String) {
   }
 
   def snapshotId(stage: String, fingerprint: String): String = {
-    val h = java.security.MessageDigest
-      .getInstance("MD5")
-      .digest(fingerprint.getBytes(StandardCharsets.UTF_8))
-      .take(8)
-      .map(b => f"$b%02x")
-      .mkString
-    s"$stage-$h"
+    val d = java.security.MessageDigest.getInstance("MD5").digest(fingerprint.getBytes(StandardCharsets.UTF_8))
+    s"$stage-${graft.util.Hex.string(d, 8)}"
   }
 
   def exists(stage: String, fingerprint: String): Boolean = {

@@ -33,7 +33,7 @@ object HtmlViz {
     */
   private[viz] def md5Color(label: String): String = {
     val d = MessageDigest.getInstance("MD5").digest(label.getBytes(StandardCharsets.UTF_8))
-    "#" + d.take(3).map(b => f"${b & 0xff}%02x").mkString
+    "#" + graft.util.Hex.string(d, 3)
   }
 
   private def jsonStr(s: String): String = {

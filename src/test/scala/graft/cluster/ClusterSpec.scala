@@ -264,7 +264,10 @@ class ClusterSpec extends AnyFunSuite with SparkTestBase {
     // NOT edge (antonyms, leading-syllable-different names)
     val base = (0 until 120).map(graft.corpus.CorpusGen.entityName)
     val members = (base ++ base.take(40).flatMap(graft.corpus.CorpusGen.variants) ++
-      Seq("happy", "unhappy", "subel dunmore", "vebel dunmore", "vet", "veterinarian")).distinct
+      Seq("happy", "unhappy", "subel dunmore", "vebel dunmore", "vet", "veterinarian") ++
+      // multibyte and astral surfaces: Spark counts and orders them by
+      // code point / UTF-8 byte, the JVM by UTF-16 unit
+      Seq("Ünïcode", "ünïcodes", "Ünïcod", "𝕏enon", "𝕏enons", "𝕏eno", "\uE000zone", "\uE000zones")).distinct
     val cfg = ClusterConfig(synonymSets = Seq(Set("vet", "veterinarian")))
     val local = CandidatePairs.edgesLocal(members, cfg).toSet
     val dist = CandidatePairs
@@ -274,6 +277,38 @@ class ClusterSpec extends AnyFunSuite with SparkTestBase {
       .toSet
     assert(local == dist, s"local-only: ${(local -- dist).take(5)}; dist-only: ${(dist -- local).take(5)}")
     assert(local.nonEmpty)
+  }
+
+  /** The string formula `bandKeys` computed before it moved onto the
+    * shared MinHash kernel, kept as the bit-for-bit reference: hex md5
+    * of `i:shingle`, per-seed String min, hex md5 of each `|`-joined
+    * band slice.
+    */
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+
+  private def referenceBandKeys(norm: String, cfg: ClusterConfig): Seq[String] = {
+    val sh = Normalize.shingles(norm, cfg.shingleK)
+    val rows = math.max(1, cfg.minhashSeeds / cfg.bands)
+    val sig = (0 until cfg.minhashSeeds).map(i => sh.map(t => md5Hex(i + ":" + t)).min)
+    (0 until cfg.bands).map(b => md5Hex(sig.slice(b * rows, (b + 1) * rows).mkString("|")))
+  }
+
+  test("bandKeys equals the reference string formula key-for-key") {
+    val names = (0 until 120).map(graft.corpus.CorpusGen.entityName)
+    val surfaces = names ++ names.flatMap(graft.corpus.CorpusGen.variants) ++
+      // empty, shorter than k, exactly k, 2- and 3-byte UTF-8, astral
+      // (UTF-16 `sliding` splits its surrogate pairs: a lone surrogate
+      // encodes as '?'), ligatures, and a bare lone surrogate
+      Seq("", "a", "ab", "abc", "é", "日本語テキスト", "𝕏 x 𝕏", "ﬁne ﬂow", "\uD835x")
+    val inputs = (surfaces ++ surfaces.map(Normalize(_))).distinct
+    for (cfg <- Seq(ClusterConfig(), ClusterConfig(minhashSeeds = 12, bands = 4), ClusterConfig(minhashSeeds = 4, bands = 8))) {
+      inputs.foreach { n =>
+        val got = CandidatePairs.bandKeys(n, cfg)
+        assert(got == referenceBandKeys(n, cfg), s"norm '$n', $cfg")
+        assert(got.length == cfg.bands)
+      }
+    }
   }
 
   test("connected components: salted propagation equals unsalted on a hub graph") {

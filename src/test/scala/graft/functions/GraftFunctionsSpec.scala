@@ -116,6 +116,31 @@ class GraftFunctionsSpec extends AnyFunSuite with GenSampling with SparkTestBase
 
   private def nullExpected(r: Row): Any = null
 
+  test("MinhashUtil.sigBytes equals sig(ArrayData), nulls and empty input included") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    val arrGen: Gen[Seq[Option[String]]] =
+      Gen.choose(0, 12).flatMap(n =>
+        Gen.listOfN(n, Gen.frequency(9 -> tokenGen.map(Some(_)), 1 -> Gen.const(None)))
+      )
+    forAllSamples(Gen.listOfN(30, arrGen), n = 5) { arrays =>
+      (arrays ++ Seq(Nil, Seq(None), Seq(None, Some("x"), None))).foreach { toks =>
+        for (seeds <- Seq(1, 4, 16)) {
+          val viaArrayData = MinhashUtil.sig(
+            new GenericArrayData(toks.map(_.map(UTF8String.fromString).orNull).toArray[Any]),
+            seeds
+          )
+          val viaBytes = MinhashUtil.sigBytes(toks.map(_.map(_.getBytes("UTF-8")).orNull).toArray, seeds)
+          val a = (0 until seeds).map(i => if (viaArrayData.isNullAt(i)) null else viaArrayData.getUTF8String(i).toString)
+          val b = viaBytes.toSeq.map(h => if (h == null) null else new String(h, "US-ASCII"))
+          assert(a == b, s"toks $toks, seeds $seeds")
+          // a seed is null exactly when no non-null token reached it
+          assert(b.forall(_ == null) == toks.forall(_.isEmpty))
+        }
+      }
+    }
+  }
+
   test("interpreted eval path matches codegen path") {
     val df = Seq(
       (Seq(1L, 2L, 3L), Seq(4L, 5L, 6L)),

@@ -25,6 +25,13 @@ class SnapshotTableSpec extends AnyFunSuite with SparkTestBase {
     assert(manifest.contains("files"))
   }
 
+  test("snapshotId is pinned: it names persisted snapshot directories") {
+    // stage + "-" + hex of the first 8 md5 bytes of the fingerprint; a
+    // change here orphans every snapshot already committed
+    val t = new SnapshotTable(spark, freshRoot())
+    assert(t.snapshotId("s", "fp") == "s-0666f0acdeed38d4")
+  }
+
   test("resumeOrCompute skips recomputation for committed fingerprints") {
     val root = freshRoot()
     val t = new SnapshotTable(spark, root)
